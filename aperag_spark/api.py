@@ -13,8 +13,8 @@ workflow through these same verbs:
 
 Everything returns DataFrames (lazy plans); nothing collects to the driver.
 The graph tables live as checkpointed pipeline stages under `out_dir`
-(resumable — plans/pipeline.py); vdbs and the fulltext index are derived
-lazily and cached per instance.
+(resumable, manifest-gated — plans/stages.py); vdbs and the fulltext index
+are derived lazily and cached per instance.
 """
 
 from __future__ import annotations
@@ -63,10 +63,12 @@ class KGEngine:
         return {k: v for k, v in res.items()}
 
     def _table(self, name: str) -> DataFrame:
+        """Stage `name` of this engine's graph: the frame of the last
+        insert/edit, else the manifest-gated stage table on disk."""
         if name not in self._tables:
-            from aperag_spark.plans.pipeline import _read_stage
+            from aperag_spark.plans.stages import read_stage
 
-            self._tables[name] = _read_stage(self.spark, self.out_dir, name)
+            self._tables[name] = read_stage(self.spark, self.out_dir, name)
         return self._tables[name]
 
     @property
@@ -349,26 +351,12 @@ class CorpusEngine:
         )
 
     def _stage(self, name: str) -> DataFrame:
-        import json
-        import os
+        # manifest-gated (plans/stages.read_stage), not isdir-gated: a
+        # build() killed mid-write leaves a partial stage dir WITHOUT a
+        # manifest — serving it would silently truncate the corpus
+        from aperag_spark.plans.stages import read_stage
 
-        from aperag_spark.sources.io import read_table
-
-        path = os.path.join(self.out_dir, name)
-        # manifest-gated, not isdir-gated: a build() killed mid-write leaves
-        # a partial stage dir WITHOUT a manifest — serving it would silently
-        # truncate the corpus. The manifest is written only after a complete
-        # stage write (plans/pipeline._write_stage).
-        manifest = os.path.join(path, "_MANIFEST.json")
-        try:
-            with open(manifest) as f:
-                json.load(f)
-        except (OSError, json.JSONDecodeError):
-            raise ValueError(
-                f"stage '{name}' not built yet (no complete manifest) — "
-                "call build() first"
-            ) from None
-        return read_table(self.spark, path).drop("_pid")
+        return read_stage(self.spark, self.out_dir, name)
 
     @property
     def minhash(self) -> DataFrame:
@@ -398,6 +386,6 @@ class CorpusEngine:
 
     def dedup_report(self) -> dict:
         """Per-stage lineage manifests (rows, partitions, fingerprints)."""
-        from aperag_spark.plans.corpus import corpus_pipeline_metrics
+        from aperag_spark.plans.stages import read_manifests
 
-        return corpus_pipeline_metrics(self.out_dir)
+        return read_manifests(self.out_dir)

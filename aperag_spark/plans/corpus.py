@@ -1,8 +1,7 @@
 """Staged, idempotently-resumable corpus-build pipeline — the training-data
-counterpart of plans/pipeline.py's KG runner, sharing its manifest machinery
-(stage table + _MANIFEST.json with input fingerprint / code version / row
-counts; a completed stage is skipped on rerun and read back, so a job killed
-mid-build resumes where it stopped with byte-identical stages —
+counterpart of plans/pipeline.py's KG runner, on the same stage store
+(plans/stages.py: a completed stage is skipped on rerun and read back, so a
+job killed mid-build resumes where it stopped with byte-identical stages —
 tests/test_corpus_pipeline.py mirrors tests/test_resume.py).
 
 Stage graph (linear; shuffle boundaries marked *):
@@ -21,8 +20,6 @@ via a session-scoped cache."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from aperag_spark.operators.corpus import (
@@ -33,11 +30,8 @@ from aperag_spark.operators.corpus import (
     quality_filter,
     select_verdict,
 )
-from aperag_spark.plans.pipeline import (
-    _read_stage,
-    _stage_is_complete,
-    _write_stage,
-)
+from aperag_spark.plans.stages import StageRunner
+from aperag_spark.session import ensure_package_shipped
 
 CORPUS_STAGES = ["minhash", "candidates", "clusters", "verdicts"]
 
@@ -54,20 +48,8 @@ def run_corpus_pipeline(
     up to stage `upto` (a prefix of CORPUS_STAGES — consumers that only
     need signatures don't pay for clustering). `fail_after_stage` simulates
     a mid-job crash for the resume test."""
-    from aperag_spark.queries import ensure_package_shipped
-
     ensure_package_shipped(spark)  # the minhash stage is an Arrow UDF
-    os.makedirs(out_dir, exist_ok=True)
-    results: dict[str, DataFrame] = {}
-
-    def stage(name: str, build):
-        if _stage_is_complete(out_dir, name, input_fingerprint):
-            results[name] = _read_stage(spark, out_dir, name)
-        else:
-            results[name] = _write_stage(build(), out_dir, name, input_fingerprint)
-        if fail_after_stage == name:
-            raise RuntimeError(f"injected failure after stage {name}")
-        return results[name]
+    stage = StageRunner(spark, out_dir, input_fingerprint, fail_after_stage)
 
     idx = CORPUS_STAGES.index(upto)
     md = stage("minhash", lambda: minhash_docs(docs))
@@ -87,17 +69,4 @@ def run_corpus_pipeline(
         stage(
             "verdicts", lambda: select_verdict(quality_filter(docs), clusters)
         )
-    return results
-
-
-def corpus_pipeline_metrics(out_dir: str) -> dict:
-    """Collect stage manifests (the per-partition lineage record)."""
-    import json
-
-    out = {}
-    for s in CORPUS_STAGES:
-        mp = os.path.join(out_dir, s, "_MANIFEST.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                out[s] = json.load(f)
-    return out
+    return stage.results

@@ -1,19 +1,6 @@
 """Staged KG-construction pipeline with checkpointed, idempotently-resumable
-stage outputs and per-partition lineage manifests.
-
-This replaces the reference's reconciler compare-and-set claims
-(aperag/index/reconciler.py:67-169) as the resume/idempotency mechanism:
-each stage writes its output table plus a _MANIFEST.json recording the input
-fingerprint, code version, row count, and per-partition row counts. On rerun,
-a stage whose manifest matches its input fingerprint is skipped and its
-output is read back — so a job killed between stages resumes where it
-stopped and reproduces byte-identical outputs (tested in
-tests/test_resume.py).
-
-Storage: Iceberg at production scale (`MERGE INTO` / snapshot overwrite per
-SURVEY.md §2.1 S5); the sandbox has no Iceberg runtime jar, so the writer
-degrades to parquet directories with the same layout. The stage graph and
-manifests are format-agnostic.
+stage outputs and per-partition lineage manifests — the stage protocol
+(write, manifest, resume gate) lives in plans/stages.py.
 
 Stage graph (shuffle boundaries marked *):
 
@@ -26,14 +13,8 @@ Stage graph (shuffle boundaries marked *):
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from aperag_spark import __version__
 from aperag_spark.operators.chunking import chunk_texts, extract_texts
 from aperag_spark.operators.extraction import extract_mentions, split_mentions
 from aperag_spark.operators.linking import build_alias_map, canonicalize
@@ -43,75 +24,7 @@ from aperag_spark.operators.merge import (
     merge_relations,
     stub_missing_endpoints,
 )
-
-
-def _manifest_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, stage, "_MANIFEST.json")
-
-
-def _write_stage(
-    df: DataFrame, out_dir: str, stage: str, input_fingerprint: str
-) -> DataFrame:
-    """Write stage output + lineage manifest; return re-read DataFrame so
-    downstream stages consume the materialized (checkpointed) table, cutting
-    lineage exactly at stage boundaries."""
-    from aperag_spark.sources.io import read_table, write_table
-
-    spark = df.sparkSession
-    path = os.path.join(out_dir, stage)
-    t0 = time.time()
-    with_pid = df.withColumn("_pid", F.spark_partition_id())
-    write_table(with_pid, path)
-    written = read_table(spark, path)
-    per_partition = {
-        str(r["_pid"]): r["cnt"]
-        for r in written.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    manifest = {
-        "stage": stage,
-        "rows": sum(per_partition.values()),
-        "partitions": per_partition,
-        "input_fingerprint": input_fingerprint,
-        "code_version": __version__,
-        "wall_sec": round(time.time() - t0, 3),
-        "completed_at": int(time.time()),
-    }
-    with open(_manifest_path(out_dir, stage), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return written.drop("_pid")
-
-
-def _stage_is_complete(out_dir: str, stage: str, input_fingerprint: str) -> bool:
-    mp = _manifest_path(out_dir, stage)
-    if not os.path.exists(mp):
-        return False
-    try:
-        with open(mp) as f:
-            m = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return False
-    return (
-        m.get("input_fingerprint") == input_fingerprint
-        and m.get("code_version") == __version__
-    )
-
-
-def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    from aperag_spark.sources.io import read_table
-
-    return read_table(spark, os.path.join(out_dir, stage)).drop("_pid")
-
-
-STAGES = [
-    "texts",
-    "chunks",
-    "mentions",
-    "entities",
-    "relations",
-    "alias_map",
-    "entities_canonical",
-    "relations_canonical",
-]
+from aperag_spark.plans.stages import StageRunner
 
 
 def run_pipeline(
@@ -130,17 +43,7 @@ def run_pipeline(
     id; in tests, the (seed, n) of the generator). `fail_after_stage`
     simulates a mid-job crash for the resume test.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    results: dict[str, DataFrame] = {}
-
-    def stage(name: str, build):
-        if _stage_is_complete(out_dir, name, input_fingerprint):
-            results[name] = _read_stage(spark, out_dir, name)
-        else:
-            results[name] = _write_stage(build(), out_dir, name, input_fingerprint)
-        if fail_after_stage == name:
-            raise RuntimeError(f"injected failure after stage {name}")
-        return results[name]
+    stage = StageRunner(spark, out_dir, input_fingerprint, fail_after_stage)
 
     if fuse_narrow:
         # one narrow stage pages→mentions (everything per-page local); skips
@@ -176,15 +79,5 @@ def run_pipeline(
         stage("entities_canonical", lambda: ents_c)
         stage("relations_canonical", lambda: rels_c)
 
-    return results
+    return stage.results
 
-
-def pipeline_metrics(out_dir: str) -> dict:
-    """Collect stage manifests (the per-partition lineage record)."""
-    out = {}
-    for s in STAGES:
-        mp = _manifest_path(out_dir, s)
-        if os.path.exists(mp):
-            with open(mp) as f:
-                out[s] = json.load(f)
-    return out

@@ -37,6 +37,7 @@ from aperag_spark.operators.corpus import (
     STOPWORDS,
 )
 from aperag_spark.operators.windows import rank_bounded
+from aperag_spark.session import ensure_package_shipped, memo
 from pyspark.sql import DataFrame, SparkSession, Window
 
 # The tokenizer regex, shared verbatim with the DuckDB oracles (RE2 and Java
@@ -51,45 +52,16 @@ CHUNK_OVERLAP = 10
 MIN_WORD_LEN = 4
 
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-
-def ensure_package_shipped(spark: SparkSession) -> None:
-    """Ship aperag_spark to executor Python workers via addPyFile — robust
-    even when the caller (e.g. the round driver) built its own SparkSession
-    without PYTHONPATH/--py-files. addPyFile works post-start; zipping is
-    cached per process, registration per session."""
-    if id(spark) in _SHIPPED_SESSIONS:
-        return
-    import os
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    repo = os.path.dirname(pkg_dir)
-    zpath = os.path.join("/tmp", f"aperag_spark_pyfiles_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        z.write(full, os.path.relpath(full, repo))
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_SESSIONS.add(id(spark))
-
-
 # Tables whose consumers do heavy NARROW per-row work fused onto the scan
 # (explodes, Arrow kernels, HOF projections, GEMM packing) → key column used
 # for the deterministic spread repartition.
 _SPREAD_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
-def _parse_bytes(v: str) -> int:
-    v = str(v).strip().lower()
-    for suf, mul in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suf + "b") or v.endswith(suf):
-            return int(float(v.rstrip("b").rstrip(suf))) * mul
-    return int(v)
+def _byte_string(spark: SparkSession, v: str) -> int:
+    """Bytes in a Spark size string ("128m", "1t", "134217728b"), parsed by
+    the JVM's own config parser."""
+    return int(spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
 
 
 def _spread_scan(spark: SparkSession, df: DataFrame, path: str, key: str) -> DataFrame:
@@ -115,7 +87,9 @@ def _spread_scan(spark: SparkSession, df: DataFrame, path: str, key: str) -> Dat
             size = os.path.getsize(path)
     except OSError:
         return df
-    mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    mpb = _byte_string(
+        spark, spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
     par = spark.sparkContext.defaultParallelism
     if (size + mpb - 1) // mpb >= par:
         return df
@@ -132,6 +106,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _per_corpus(spark: SparkSession, sf_dir: str, build):
+    """`build(spark, sf_dir)`, memoised per (session, corpus) in the session
+    memo — for frames several battery queries derive from."""
+    import os
+
+    return memo(spark, (build, os.path.abspath(sf_dir)), lambda: build(spark, sf_dir))
+
+
 def _words(col="text"):
     return F.split(F.col(col), r"\s+")
 
@@ -141,24 +123,18 @@ def _words(col="text"):
 # ---------------------------------------------------------------------------
 
 
-_KG_CHUNKS_CACHE: dict = {}
-
-
 def q_kg_chunking(spark, sf_dir):
     """C1 chunker (operate.py:71-115 semantics) over documents.text with the
     production window/stride logic at corpus-appropriate size. The chunk
     frame feeds kg_chunk_ids and kg_token_budget too — lazily checkpointed
-    per (session, corpus) so the mapInPandas chunker runs once."""
-    import os
+    in the session memo so the mapInPandas chunker runs once per corpus."""
+    return _per_corpus(spark, sf_dir, _kg_chunks)
 
+
+def _kg_chunks(spark, sf_dir):
     import pandas as pd
 
     from aperag_spark.textproc import Tokenizer, chunking_by_token_size
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _KG_CHUNKS_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -184,11 +160,9 @@ def q_kg_chunking(spark, sf_dir):
                 rows, columns=["doc_id", "chunk_order_index", "tokens", "content"]
             )
 
-    out = docs.mapInPandas(
+    return docs.mapInPandas(
         _chunk, "doc_id bigint, chunk_order_index int, tokens int, content string"
     ).localCheckpoint(eager=False)
-    _KG_CHUNKS_CACHE[key] = out
-    return out
 
 
 _STRIDE = CHUNK_SIZE - CHUNK_OVERLAP
@@ -336,23 +310,18 @@ _SQL_BIGRAM_EDGES = f"""
 """
 
 
-_KG_RELATIONS_CACHE: dict = {}
-
-
 def q_kg_relations(spark, sf_dir):
     """M9 edge merge: weight = SUM of occurrences (operate.py:406),
     provenance = distinct doc count. FIVE downstream queries (degree,
     top-entities, one-hop, BFS, connected components) derive from this
-    frame — lazily checkpointed per (session, corpus) so each battery
+    frame — lazily checkpointed in the session memo so each battery
     consumer reuses one execution (same pattern as the BM25/simhash
-    caches)."""
-    import os
+    frames)."""
+    return _per_corpus(spark, sf_dir, _kg_relations)
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _KG_RELATIONS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+
+def _kg_relations(spark, sf_dir):
+    return (
         _bigram_edges(spark, sf_dir)
         .groupBy("src", "tgt")
         .agg(
@@ -361,8 +330,6 @@ def q_kg_relations(spark, sf_dir):
         )
         .localCheckpoint(eager=False)
     )
-    _KG_RELATIONS_CACHE[key] = out
-    return out
 
 
 ORACLE_KG_RELATIONS = f"""
@@ -833,9 +800,10 @@ def q_kg_curated_merge(spark, sf_dir):
     # the target through rewiring — so both merges run on the named slice
     # only (value-identical to merging the full corpus first; the DuckDB
     # oracle computes the full-corpus form)
-    # merge_entities aggregates its input twice (fragment merge + type
-    # vote); checkpoint the tiny named slice so the 5M-row mention explode
-    # runs once for it, not twice
+    # merge_entities is single-pass over its input, but
+    # merge_entities_curated reads `ents` twice (the driver-side collect of
+    # the named rows, then the rewritten table); checkpoint the tiny named
+    # slice so the 5M-row mention explode behind it runs once, not twice
     em_named = em.where(F.col("entity_name").isin(named)).localCheckpoint(eager=False)
     ents = merge_entities(em_named)
     rm = _word_relation_mentions(spark, sf_dir, 0, 10**9)
@@ -1086,6 +1054,27 @@ _SQL_SHINGLES = """
 """
 
 
+_CORPUS_STAGES_PREFIX = "aperag_corpus_stages_"
+
+
+def _sweep_dead_stage_dirs(base: str) -> None:
+    """Remove the corpus stage dirs under `base` left by processes that are
+    no longer alive (a driver killed before exit leaks its tmpfs tables)."""
+    import os
+    import shutil
+
+    for name in os.listdir(base):
+        pid = name[len(_CORPUS_STAGES_PREFIX):]
+        if not (name.startswith(_CORPUS_STAGES_PREFIX) and pid.isdigit()):
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+
+
 def _corpus_stage(spark, sf_dir, stage: str) -> DataFrame:
     """Read `stage` from the session-scoped STAGED corpus pipeline for
     sf_dir (plans/corpus.py), building missing prefix stages on first use.
@@ -1124,11 +1113,10 @@ def _corpus_stage(spark, sf_dir, stage: str) -> DataFrame:
     # filesystem; this sandbox's disk-backed /tmp has bursty write latency
     # that lands entirely on the biggest stage write)
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    out_dir = os.path.join(
-        base,
-        f"aperag_corpus_stages_{os.getpid()}",
-        re.sub(r"[^A-Za-z0-9._-]+", "_", key).strip("_"),
-    )
+    pid_dir = os.path.join(base, f"{_CORPUS_STAGES_PREFIX}{os.getpid()}")
+    if not os.path.isdir(pid_dir):
+        _sweep_dead_stage_dirs(base)
+    out_dir = os.path.join(pid_dir, re.sub(r"[^A-Za-z0-9._-]+", "_", key).strip("_"))
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     res = run_corpus_pipeline(
         spark, docs, out_dir, input_fingerprint=fingerprint, upto=stage
@@ -1491,9 +1479,6 @@ WHERE jaccard >= {NGRAM_JACCARD_T}
 """
 
 
-_SIMHASH_FP_CACHE: dict = {}
-
-
 def q_dedup_simhash(spark, sf_dir):
     """32-bit SimHash fingerprint per doc: per-word 32-bit hash
     (md5-derived, portable), occurrence-weighted bit vote, vote sign →
@@ -1507,15 +1492,13 @@ def q_dedup_simhash(spark, sf_dir):
     per doc before the exchange (vs round 1's per-(doc,word,bit) explode:
     32× shuffle inflation + a second shuffle).
 
-    The fingerprint frame is lazily checkpointed per (session, corpus):
-    the banding/verify query derives from the identical frame, so the two
-    consumers share one execution (same pattern as the BM25 index cache)."""
-    import os
+    The fingerprint frame is lazily checkpointed in the session memo: the
+    banding/verify query derives from the identical frame, so the two
+    consumers share one execution (same pattern as the BM25 index)."""
+    return _per_corpus(spark, sf_dir, _simhash_fingerprints)
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _SIMHASH_FP_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _simhash_fingerprints(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     occ = (
         docs.select("doc_id", F.explode(_words()).alias("w"))
@@ -1536,12 +1519,10 @@ def q_dedup_simhash(spark, sf_dir):
             for b in range(32)
         )
     )
-    out = votes.select(
+    return votes.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         fingerprint.cast("bigint").alias("simhash"),
     ).localCheckpoint(eager=False)
-    _SIMHASH_FP_CACHE[key] = out
-    return out
 
 
 ORACLE_DEDUP_SIMHASH = """
@@ -2270,38 +2251,30 @@ FT_KEYWORDS = ["vector", "join", "scan"]
 FT_TOPK = 20
 
 
-_BM25_INDEX_CACHE: dict = {}
-
-
 def _fulltext_index_cached(spark, sf_dir) -> dict:
     """Session-scoped shared BM25 index: fulltext_bm25 and hybrid_rrf derive
     IDENTICAL postings/doclens tables from `documents` — build once per
-    (session, corpus), lazily checkpoint, reuse. (Checkpointing for a single
-    consumer measured as a small loss in round 2; the win is the second
-    consumer — interleaved A/B in BENCH.md round 5.)"""
-    import os
+    (session, corpus) in the session memo, lazily checkpoint, reuse.
+    (Checkpointing for a single consumer measured as a small loss in round
+    2; the win is the second consumer — interleaved A/B in BENCH.md round
+    5.)"""
+    return _per_corpus(spark, sf_dir, _bm25_index)
 
+
+def _bm25_index(spark, sf_dir) -> dict:
     from aperag_spark.operators.fulltext import build_fulltext_index
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _BM25_INDEX_CACHE.get(key)
-    if idx is None:
-        docs = _t(spark, sf_dir, "documents")
-        built = build_fulltext_index(docs, "doc_id", "text")
-        # checkpoint postings FIRST and re-derive doclens from the
-        # checkpointed frame (dl = Σ tf per id, the operator's own
-        # derivation): checkpointing the dict values independently would
-        # leave doclens' lineage pointing at the raw explode, re-running
-        # the analyze pass on materialization.
-        postings = built["postings"].localCheckpoint(eager=False)
-        doclens = (
-            postings.groupBy("id")
-            .agg(F.sum("tf").alias("dl"))
-            .localCheckpoint(eager=False)
-        )
-        idx = {"postings": postings, "doclens": doclens}
-        _BM25_INDEX_CACHE[key] = idx
-    return idx
+    docs = _t(spark, sf_dir, "documents")
+    built = build_fulltext_index(docs, "doc_id", "text")
+    # checkpoint postings FIRST and re-derive doclens from the checkpointed
+    # frame (dl = Σ tf per id, the operator's own derivation): checkpointing
+    # the dict values independently would leave doclens' lineage pointing at
+    # the raw explode, re-running the analyze pass on materialization.
+    postings = built["postings"].localCheckpoint(eager=False)
+    doclens = (
+        postings.groupBy("id").agg(F.sum("tf").alias("dl")).localCheckpoint(eager=False)
+    )
+    return {"postings": postings, "doclens": doclens}
 
 
 def q_fulltext_bm25(spark, sf_dir):

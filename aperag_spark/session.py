@@ -1,4 +1,6 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, plus the per-session
+state that rides on a session: the package shipped to its Python workers
+and the memo of derived frames several consumers share.
 
 Tuned for the sandbox (local[N], single JVM) but every setting is the one
 you'd ship to a 1000-executor cluster: AQE on (runtime coalescing + skew-join
@@ -10,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -64,3 +66,47 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def memo(spark: SparkSession, key, build):
+    """The value memoised under `key` for this session, built by `build()`
+    on first use. Entries live on the session object itself, so they go
+    when the session goes; `clear` releases them earlier."""
+    entries = vars(spark).setdefault("_aperag_memo", {})
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+def clear(spark: SparkSession) -> None:
+    """Drop every memo entry of this session, unpersisting the frames (and
+    the frames inside dict entries)."""
+    for value in vars(spark).pop("_aperag_memo", {}).values():
+        for df in value.values() if isinstance(value, dict) else [value]:
+            if isinstance(df, DataFrame):
+                df.unpersist()
+
+
+def ensure_package_shipped(spark: SparkSession) -> None:
+    """Ship aperag_spark to executor Python workers via addPyFile — robust
+    even when the caller (e.g. the round driver) built its own SparkSession
+    without PYTHONPATH/--py-files. addPyFile works post-start; zipping is
+    cached per process, registration per session."""
+    memo(spark, "pyfiles", lambda: _add_package_zip(spark))
+
+
+def _add_package_zip(spark: SparkSession) -> str:
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(pkg_dir)
+    zpath = os.path.join("/tmp", f"aperag_spark_pyfiles_{os.getpid()}.zip")
+    if not os.path.exists(zpath):
+        with zipfile.ZipFile(zpath, "w") as z:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        z.write(full, os.path.relpath(full, repo))
+    spark.sparkContext.addPyFile(zpath)
+    return zpath

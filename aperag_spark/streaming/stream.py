@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from aperag_spark.operators.chunking import chunk_texts, extract_texts
 from aperag_spark.operators.extraction import extract_mentions
+from aperag_spark.plans.stages import SnapshotLog
+from aperag_spark.session import ensure_package_shipped
 from aperag_spark.synth import PAGES_SCHEMA
 
 
@@ -380,9 +382,6 @@ def run_incremental_graph_stream(
     LATEST pointer recording the applied batch_id — a replayed batch sees
     its own id already applied and skips (the Spark form of the reference
     reconciler's CAS, reconciler.py:101-169)."""
-    import json
-    import os
-
     from aperag_spark.operators.extraction import split_mentions
     from aperag_spark.operators.incremental import (
         merge_entities_incremental,
@@ -390,19 +389,9 @@ def run_incremental_graph_stream(
     )
     from aperag_spark.operators.merge import merge_entities, merge_relations
 
-    os.makedirs(out_dir, exist_ok=True)
-    pointer = os.path.join(out_dir, "LATEST")
+    log = SnapshotLog(spark, out_dir)
 
-    def _read_pointer():
-        if not os.path.exists(pointer):
-            return None
-        with open(pointer) as f:
-            return json.load(f)
-
-    def _fold(batch_df, batch_id: int):
-        prev = _read_pointer()
-        if prev is not None and batch_id <= prev["batch_id"]:
-            return  # replayed batch after restart: already applied
+    def _fold(batch_df, batch_id: int, prev: dict | None):
         raw_e, raw_r = split_mentions(batch_df)
         if prev is None:
             ents = merge_entities(raw_e)
@@ -412,26 +401,23 @@ def run_incremental_graph_stream(
             ex_r = spark.read.parquet(prev["relations"])
             ents = merge_entities_incremental(raw_e, ex_e)
             rels = merge_relations_incremental(raw_r, ex_r)
-        e_path = os.path.join(out_dir, f"entities_v{batch_id}")
-        r_path = os.path.join(out_dir, f"relations_v{batch_id}")
-        ents.write.mode("overwrite").parquet(e_path)
-        rels.drop("first_occ").write.mode("overwrite").parquet(r_path)
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "entities": e_path, "relations": r_path}, f)
-        os.replace(tmp, pointer)  # atomic pointer swing = the commit point
+        log.commit(
+            batch_id,
+            entities=log.write(ents, "entities", batch_id),
+            relations=log.write(rels.drop("first_occ"), "relations", batch_id),
+        )
 
     mentions = streaming_mentions(
         read_pages_stream(spark, pages_dir, max_files_per_trigger), workspace
     )
     q = (
-        mentions.writeStream.foreachBatch(_fold)
+        mentions.writeStream.foreachBatch(log.fold(_fold))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return _read_pointer()
+    return log.latest()
 
 
 def run_stream_to_table(
@@ -500,9 +486,6 @@ def run_streaming_neardup(
     dedup_cluster verdicts there, and the freeze behavior separately.
 
     Returns the LATEST pointer dict (batch_id, verdicts path)."""
-    import json
-    import os
-
     from aperag_spark.operators.corpus import (
         DEDUP_CLUSTER_T,
         MINHASH_BUCKET_CAP,
@@ -514,54 +497,17 @@ def run_streaming_neardup(
 
     cap = MINHASH_BUCKET_CAP if bucket_cap is None else bucket_cap
     thr = DEDUP_CLUSTER_T if threshold is None else threshold
-    os.makedirs(out_dir, exist_ok=True)
-    pointer = os.path.join(out_dir, "LATEST")
+    log = SnapshotLog(spark, out_dir)
 
-    def _read_pointer():
-        if not os.path.exists(pointer):
-            return None
-        with open(pointer) as f:
-            return json.load(f)
-
-    def _store(name: str, schema: str, before: int) -> DataFrame:
-        """Committed state = batch dirs with id < `before` ONLY. A crashed
-        attempt of the CURRENT batch may have left batch=<bid> dirs behind
-        (the pointer — the commit point — never swung); reading them back
-        during the replay would double-count the batch's own members and
-        mis-freeze buckets, so the fold always reads strictly-prior batches
-        and unions its own in-flight frames explicitly."""
-        path = os.path.join(out_dir, name)
-        done = [
-            e
-            for e in (os.listdir(path) if os.path.isdir(path) else [])
-            if e.startswith("batch=") and int(e.split("=", 1)[1]) < before
-        ]
-        if done:
-            return (
-                spark.read.parquet(*[os.path.join(path, e) for e in done])
-            )
-        return spark.createDataFrame([], schema)
-
-    def _append(df: DataFrame, name: str, bid: int) -> None:
-        # per-batch partition dir, overwritten on replay → idempotent append
-        df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, name, f"batch={bid}")
-        )
-
-    def _fold(batch_df, bid: int):
-        prev = _read_pointer()
-        if prev is not None and bid <= prev["batch_id"]:
-            return  # replayed batch after restart: already applied
+    def _fold(batch_df, bid: int, _prev: dict | None):
         docs = batch_df.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-        _append(docs.select("doc_id"), "ids", bid)
-        md = minhash_docs(docs)
-        _append(md, "sigs", bid)
-        md = spark.read.parquet(os.path.join(out_dir, "sigs", f"batch={bid}"))
+        ids_path = log.append(docs.select("doc_id"), "ids", bid)
+        md = spark.read.parquet(log.append(minhash_docs(docs), "sigs", bid))
 
         new_b = md.select(
             "doc_id", F.posexplode("mh").alias("seed", "minhash")
         )
-        old_b = _store("buckets", "seed int, minhash string, doc_id long", bid)
+        old_b = log.committed("buckets", "seed int, minhash string, doc_id long", bid)
         old_cnt = old_b.groupBy("seed", "minhash").agg(
             F.count(F.lit(1)).alias("old_cnt")
         )
@@ -594,7 +540,7 @@ def run_streaming_neardup(
         pairs = po.unionByName(pn).distinct()
         # verify on committed signatures ∪ this batch's own (shared op;
         # same round-6 contract as the batch candidates path)
-        sigs_all = _store(
+        sigs_all = log.committed(
             "sigs",
             "doc_id bigint, hs array<string>, hl array<long>, mh array<string>",
             bid,
@@ -604,7 +550,7 @@ def run_streaming_neardup(
             .where(F.col("jaccard") >= F.lit(thr))
             .select("doc_a", "doc_b")
         )
-        _append(edges, "edges", bid)
+        edges_path = log.append(edges, "edges", bid)
         # grow bucket state only while within the cap (frozen buckets stop)
         grow = n_flat.join(
             ok.select("seed", "minhash"), ["seed", "minhash"]
@@ -620,19 +566,17 @@ def run_streaming_neardup(
             )
             .select("seed", "minhash", F.explode("new_members").alias("doc_id"))
         )
-        _append(grow.unionByName(freeze), "buckets", bid)
+        log.append(grow.unionByName(freeze), "buckets", bid)
 
         # refresh the verdict: the shared CC verdict op over committed
         # edges ∪ this batch's (tiny, bucket-capped) new edges
         edges_all = (
-            _store("edges", "doc_a bigint, doc_b bigint", bid)
-            .unionByName(
-                spark.read.parquet(os.path.join(out_dir, "edges", f"batch={bid}"))
-            )
+            log.committed("edges", "doc_a bigint, doc_b bigint", bid)
+            .unionByName(spark.read.parquet(edges_path))
             .localCheckpoint()  # CC iterates over it; unpersisted below
         )
-        ids_all = _store("ids", "doc_id long", bid).unionByName(
-            spark.read.parquet(os.path.join(out_dir, "ids", f"batch={bid}"))
+        ids_all = log.committed("ids", "doc_id long", bid).unionByName(
+            spark.read.parquet(ids_path)
         )
         if edges_all.take(1):
             verdict = cluster_verdict(edges_all, ids_all, checkpoint=False)
@@ -642,17 +586,13 @@ def run_streaming_neardup(
                 F.col("doc_id").cast("bigint").alias("canonical_id"),
                 F.lit(True).alias("keep"),
             )
-        v_path = os.path.join(out_dir, f"verdicts_v{bid}")
-        verdict.write.mode("overwrite").parquet(v_path)
+        v_path = log.write(verdict, "verdicts", bid)
         if fail_before_commit == bid:
             # crash-injection for the replay test: every state append for
             # this batch has landed but the pointer never swings — the
             # replay must not read the crashed attempt's own state back
             raise RuntimeError(f"injected failure before commit of batch {bid}")
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid, "verdicts": v_path}, f)
-        os.replace(tmp, pointer)  # atomic pointer swing = the commit point
+        log.commit(bid, verdicts=v_path)
         # a long-lived stream folds thousands of batches: release the
         # per-batch checkpointed blocks instead of pinning them forever
         for ckpt in (nb, edges_all):
@@ -661,8 +601,6 @@ def run_streaming_neardup(
             except Exception:
                 pass
 
-    from aperag_spark.queries import ensure_package_shipped
-
     ensure_package_shipped(spark)
     docs_stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -670,10 +608,10 @@ def run_streaming_neardup(
         .parquet(docs_dir)
     )
     q = (
-        docs_stream.writeStream.foreachBatch(_fold)
+        docs_stream.writeStream.foreachBatch(log.fold(_fold))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return _read_pointer()
+    return log.latest()

@@ -86,7 +86,8 @@ def main() -> None:
     gen(n_docs, dup_frac, sf_dir)
     gen_sec = round(time.time() - t0, 1)
 
-    from aperag_spark.plans.corpus import corpus_pipeline_metrics, run_corpus_pipeline
+    from aperag_spark.plans.corpus import run_corpus_pipeline
+    from aperag_spark.plans.stages import read_manifests
     from aperag_spark.queries import QUERIES, _t
     from aperag_spark.session import get_spark
 
@@ -99,7 +100,7 @@ def main() -> None:
     pipe_sec = round(time.time() - t0, 1)
     stages = {
         s: {"wall_sec": m["wall_sec"], "rows": m["rows"]}
-        for s, m in corpus_pipeline_metrics(stage_dir).items()
+        for s, m in read_manifests(stage_dir).items()
     }
 
     q_secs = {}

@@ -22,7 +22,8 @@ def main() -> None:
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    from aperag_spark.plans.pipeline import pipeline_metrics, run_pipeline
+    from aperag_spark.plans.pipeline import run_pipeline
+    from aperag_spark.plans.stages import read_manifests
 
     shutil.rmtree(out_dir, ignore_errors=True)
     pages = spark.read.parquet(pages_dir)
@@ -52,7 +53,7 @@ def main() -> None:
             spark, pages, run_dir, input_fingerprint="scaling-bench", fuse_narrow=fuse
         )
         total = time.time() - t0
-        stages = {s: m["wall_sec"] for s, m in pipeline_metrics(run_dir).items()}
+        stages = {s: m["wall_sec"] for s, m in read_manifests(run_dir).items()}
         triple_sec = sum(stages.get(s, 0.0) for s in triple_stages)
         cand = (triple_sec, total, stages, run_dir, res)
         if best is None or cand[0] < best[0]:

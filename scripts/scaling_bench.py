@@ -20,11 +20,21 @@ i.e. the fraction of the same-window hardware-achievable speedup the
 pipeline realizes. >= 3 sweeps; the median is the headline.
 
 Usage: python scripts/scaling_bench.py [n_pages] [n_sweeps] [repeats]
+                                      [--trend-pages N]
+
+    100000 3 2                          the sweep-history point
+    200000 1 2                          the sf1 trend point (one sweep)
+    200000 3 2 --trend-pages 1000000    sf1 sweeps + a single-pass sf10-class
+                                        trend point at local[4] and local[16]
+    1000000 3 2                         paired sweeps at the 1M-page point
+
+Writes the report to BENCH.md when absent, else BENCH_SWEEP_LATEST.md.
 Run EXCLUSIVELY — never time two Spark jobs concurrently on this box.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import multiprocessing as mp
@@ -146,10 +156,43 @@ def paired_sweep(k: int, zpath: str, pages_dir: str, repeats: int) -> dict:
     }
 
 
+def trend_point(tmp: str, zpath: str, n_pages: int) -> tuple[dict, str]:
+    """Single pass of the primary pair on a larger input: the claim is
+    scan-boundedness (seconds per 1000 pages flat as input grows) and output
+    identity across parallelism levels, not another efficiency estimate."""
+    pages_dir = gen_input(tmp, n_pages)
+    runs = {c: run_once(c, zpath, pages_dir, repeats=1) for c in PRIMARY}
+    shutil.rmtree(pages_dir, ignore_errors=True)
+    rows = "\n".join(
+        f"| local[{c}] | {r['triple_stage_sec']} "
+        f"| {round(r['triple_stage_sec'] / n_pages * 1000, 3)} "
+        f"| {r['triples_per_sec']} | {r['total_sec']} | {r['n_triples']} |"
+        for c, r in runs.items()
+    )
+    identical = len({r["n_triples"] for r in runs.values()}) == 1
+    md = f"""
+## Trend point ({n_pages} pages, single pass)
+
+| config | triple stages (s) | s per 1000 pages | triples/sec | full pipeline (s) | n_triples |
+|---|---|---|---|---|---|
+{rows}
+
+Outputs bit-identical across parallelism levels: {identical}.
+"""
+    return {"n_pages": n_pages, "configs": {str(c): r for c, r in runs.items()}}, md
+
+
 def main() -> None:
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000  # FIXTURES sf-large
-    n_sweeps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    ap = argparse.ArgumentParser(description="paired N-vs-4N scaling sweeps")
+    ap.add_argument("n_pages", nargs="?", type=int, default=100_000)  # FIXTURES sf-large
+    ap.add_argument("n_sweeps", nargs="?", type=int, default=3)
+    ap.add_argument("repeats", nargs="?", type=int, default=2)
+    ap.add_argument(
+        "--trend-pages", type=int, default=0,
+        help="also run a single-pass trend point at this many pages",
+    )
+    args = ap.parse_args()
+    n_pages, n_sweeps, repeats = args.n_pages, args.n_sweeps, args.repeats
     tmp = tempfile.mkdtemp(prefix="kg_scaling_")
     zpath = build_zip(tmp)
     pages_dir = gen_input(tmp, n_pages)
@@ -166,6 +209,10 @@ def main() -> None:
     }
     for cores in EXTRA_CONFIGS:
         curve[cores] = run_once(cores, zpath, pages_dir, repeats=repeats)
+    trend, trend_md = None, ""
+    if args.trend_pages:
+        shutil.rmtree(pages_dir, ignore_errors=True)
+        trend, trend_md = trend_point(tmp, zpath, args.trend_pages)
 
     report = {
         "n_pages": n_pages,
@@ -175,6 +222,7 @@ def main() -> None:
         "median_normalized_efficiency": median_norm,
         "median_raw_efficiency": median_raw,
         "curve": {str(c): r for c, r in sorted(curve.items())},
+        "trend": trend,
     }
     print(json.dumps(report, indent=1))
 
@@ -235,7 +283,7 @@ resource increase past ~8 cores.
 
 Output identity across all configs: triples = {curve[PRIMARY[0]]["n_triples"]}
 (equal everywhere: {identical}).
-
+{trend_md}
 Raw JSON: `{json.dumps(report)}`
 """
     # never clobber a curated BENCH.md: write the fresh report next to it

@@ -9,11 +9,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from aperag_spark.plans.corpus import (
-    CORPUS_STAGES,
-    corpus_pipeline_metrics,
-    run_corpus_pipeline,
-)
+from aperag_spark.plans.corpus import CORPUS_STAGES, run_corpus_pipeline
+from aperag_spark.plans.stages import read_manifests
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -107,7 +104,7 @@ def test_stages_match_battery_queries(spark, tmp_path):
 def test_metrics_record_lineage(spark, tmp_path):
     out = str(tmp_path / "lineage")
     run_corpus_pipeline(spark, _docs(spark), out, input_fingerprint="v")
-    m = corpus_pipeline_metrics(out)
+    m = read_manifests(out)
     assert set(m) == set(CORPUS_STAGES)
     for stage in CORPUS_STAGES:
         assert m[stage]["rows"] == sum(m[stage]["partitions"].values())

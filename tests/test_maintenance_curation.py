@@ -13,6 +13,7 @@ our port emits sorted order (the documented deterministic refinement).
 from __future__ import annotations
 
 import ast
+import os
 import re
 
 import pyspark.sql.functions as F
@@ -20,6 +21,9 @@ import pytest
 
 REF_UTILS_GRAPH = "/root/reference/aperag/graph/lightrag/utils_graph.py"
 REF_PROMPT = "/root/reference/aperag/graph/lightrag/prompt.py"
+needs_reference = pytest.mark.skipif(
+    not os.path.exists(REF_UTILS_GRAPH), reason="reference checkout not present"
+)
 
 
 def _load_reference_mergers():
@@ -38,10 +42,14 @@ def _load_reference_mergers():
     return ns["_merge_entity_attributes"], ns["_merge_relation_attributes"], sep
 
 
-REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = _load_reference_mergers()
+@pytest.fixture(scope="module")
+def reference():
+    """(entity merge, relation merge, GRAPH_FIELD_SEP), executed from the
+    reference source — loaded only by the tests that compare against it."""
+    return _load_reference_mergers()
 
 
-def _agree(mine: dict, ref: dict, strategy: dict):
+def _agree(mine: dict, ref: dict, strategy: dict, REF_SEP: str):
     assert set(mine) == set(ref)
     for k in ref:
         if strategy.get(k, "keep_first") == "join_unique":
@@ -75,7 +83,9 @@ ENTITY_STRATEGIES = [
 ]
 
 
-def test_entity_merge_matrix_vs_reference():
+@needs_reference
+def test_entity_merge_matrix_vs_reference(reference):
+    REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = reference
     for data_list in ENTITY_CASES:
         for strategy in ENTITY_STRATEGIES:
             from aperag_spark.operators.maintenance import merge_entity_attributes
@@ -84,6 +94,7 @@ def test_entity_merge_matrix_vs_reference():
                 merge_entity_attributes(data_list, strategy),
                 REF_ENTITY_MERGE(data_list, strategy),
                 strategy,
+                REF_SEP,
             )
 
 
@@ -107,7 +118,9 @@ RELATION_STRATEGIES = [
 ]
 
 
-def test_relation_merge_matrix_vs_reference():
+@needs_reference
+def test_relation_merge_matrix_vs_reference(reference):
+    REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = reference
     for data_list in RELATION_CASES:
         for strategy in RELATION_STRATEGIES:
             from aperag_spark.operators.maintenance import merge_relation_attributes
@@ -116,6 +129,7 @@ def test_relation_merge_matrix_vs_reference():
                 merge_relation_attributes(data_list, strategy),
                 REF_RELATION_MERGE(data_list, strategy),
                 strategy,
+                REF_SEP,
             )
 
 
@@ -158,7 +172,9 @@ def graph(spark):
     return ents, rels
 
 
-def test_merge_entities_curated_matches_reference_semantics(graph):
+@needs_reference
+def test_merge_entities_curated_matches_reference_semantics(graph, reference):
+    REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = reference
     from aperag_spark.operators.maintenance import (
         ENTITY_MERGE_DEFAULT_STRATEGY,
         merge_entities_curated,
@@ -342,11 +358,13 @@ def test_kgengine_curation_wiring(spark, tmp_path):
     )
 
 
-def test_merge_matrix_randomized_fuzz_vs_reference():
+@needs_reference
+def test_merge_matrix_randomized_fuzz_vs_reference(reference):
     """500 randomized (data_list, strategy) cases per variant against the
     executed reference functions — catches interaction bugs the fixed
     matrix misses (falsy filtering x strategy, SEP-embedded values, mixed
     types under max, absent keys)."""
+    REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = reference
     import random
 
     from aperag_spark.operators.maintenance import (
@@ -386,6 +404,7 @@ def test_merge_matrix_randomized_fuzz_vs_reference():
             merge_entity_attributes(ent_list, strategy),
             REF_ENTITY_MERGE(ent_list, strategy),
             strategy,
+            REF_SEP,
         )
         # the relation variant str()-casts and has the numeric max branch —
         # mixed types exercise it as-is
@@ -393,4 +412,5 @@ def test_merge_matrix_randomized_fuzz_vs_reference():
             merge_relation_attributes(data_list, strategy),
             REF_RELATION_MERGE(data_list, strategy),
             strategy,
+            REF_SEP,
         )

@@ -8,7 +8,8 @@ import os
 
 import pytest
 
-from aperag_spark.plans.pipeline import pipeline_metrics, run_pipeline
+from aperag_spark.plans.pipeline import run_pipeline
+from aperag_spark.plans.stages import read_manifests
 from aperag_spark.synth import gen_pages_df
 
 
@@ -68,7 +69,7 @@ def test_corrupt_manifest_heals(spark, pages, tmp_path):
 def test_manifests_record_per_partition_lineage(spark, pages, tmp_path):
     out = str(tmp_path / "lineage")
     run_pipeline(spark, pages, out, input_fingerprint="v", with_linking=False)
-    metrics = pipeline_metrics(out)
+    metrics = read_manifests(out)
     for stage in ["texts", "chunks", "mentions", "entities", "relations"]:
         m = metrics[stage]
         assert m["rows"] == sum(m["partitions"].values())
