@@ -11,7 +11,9 @@ Scale notes: each iteration is one self-join + one groupBy-min; lineage is
 cut with localCheckpoint() per iteration so plans don't grow superlinearly;
 convergence is detected by counting changed labels (an aggregate, not a
 collect of the data). Alias clusters are tiny-diameter (name variants), so
-iterations ~ O(log d) ≈ 2-4 in practice; max_iter bounds pathology.
+iterations ~ O(log d) ≈ 2-4 in practice; max_iter bounds pathology, and a
+run that reaches it without converging raises instead of returning partial
+labels.
 """
 
 from __future__ import annotations
@@ -25,7 +27,11 @@ def connected_components(
 ) -> DataFrame:
     """edges(src,dst) → (node, component) where component = min node id in
     the component (string min). Undirected; isolated nodes absent from
-    `edges` are absent from the result."""
+    `edges` are absent from the result. Raises RuntimeError, reporting the
+    changed-label count, when max_iter rounds end with labels still
+    changing."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be at least 1, got {max_iter}")
     undirected = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a") != F.col("b")
     )
@@ -83,5 +89,9 @@ def connected_components(
         changed = new_labels.where(F.col("component") != F.col("old")).count()
         labels = new_labels.select("node", "component")
         if changed == 0:
-            break
-    return labels
+            return labels
+    # the last round still moved labels: they are not components yet
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} rounds: "
+        f"{changed} labels changed in the last round"
+    )

@@ -2,21 +2,37 @@
 stage outputs and per-partition lineage manifests — the stage protocol
 (write, manifest, resume gate) lives in plans/stages.py.
 
-Stage graph (shuffle boundaries marked *):
+Stage graph (stage tables in [brackets], shuffle boundaries marked *):
 
-    pages ─ extract_texts ─ chunk_texts ─ extract_mentions
-          ├─ raw_entities ─* merge_entities ──┐
-          └─ raw_relations ─* merge_relations ┤─ stub_missing_endpoints
-                                              └─* LSH+CC alias_map
-                                              └─* canonical entities/relations
+    pages ─ extract_narrow: ONE Python pass (lazy localCheckpoint)
+              ├─ [texts]     ┐
+              ├─ [chunks]    ├ JVM projections (split_narrow)
+              └─ [mentions]  ┘
+    [mentions] ─ raw_entities  ─* merge_entities ──────────┐
+               └ raw_relations ─* merge_relations = R ─────┴─ stub endpoints ─ [entities]
+    R ─ finalize ─ [relations]           (R: lazy localCheckpoint, 3 consumers)
+    [entities] ─* MinHash LSH + connected components ─ [alias_map]
+    [entities] + R + [alias_map] ─* canonicalize
+               ─ [entities_canonical], [relations_canonical]
+
+A stage's inputs are built only inside the stage builds that consume them,
+so a run whose stages are all on disk reads them back and runs nothing
+else. `fuse_narrow=True` replaces the three narrow stages with one
+`mentions` stage (extract_mentions_fused).
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 
-from aperag_spark.operators.chunking import chunk_texts, extract_texts
-from aperag_spark.operators.extraction import extract_mentions, split_mentions
+from aperag_spark.operators.extraction import (
+    extract_mentions_fused,
+    extract_narrow,
+    split_mentions,
+    split_narrow,
+)
 from aperag_spark.operators.linking import build_alias_map, canonicalize
 from aperag_spark.operators.merge import (
     finalize_relations,
@@ -49,35 +65,53 @@ def run_pipeline(
         # one narrow stage pages→mentions (everything per-page local); skips
         # the texts/chunks checkpoints — use when resume granularity at those
         # boundaries isn't needed (e.g. throughput benches)
-        from aperag_spark.operators.extraction import extract_mentions_fused
-
         mentions = stage(
             "mentions", lambda: extract_mentions_fused(pages, workspace)
         )
     else:
-        texts = stage("texts", lambda: extract_texts(pages, workspace))
-        chunks = stage("chunks", lambda: chunk_texts(texts, workspace))
-        mentions = stage("mentions", lambda: extract_mentions(chunks))
+        # the three narrow stages are projections of ONE Python pass over
+        # pages; its lazy checkpoint is computed by the first stage write
+        # that needs it and read from memory by the other two
+        @functools.cache
+        def narrow():
+            return split_narrow(
+                extract_narrow(pages, workspace).localCheckpoint(eager=False)
+            )
+
+        stage("texts", lambda: narrow()[0])
+        stage("chunks", lambda: narrow()[1])
+        mentions = stage("mentions", lambda: narrow()[2])
     raw_entities, raw_relations = split_mentions(mentions)
-    # LAZY checkpoint: the full relation-merge frame has THREE consumers
-    # (entity-stub derivation, the finalized relations stage, canonicalize),
-    # each of which would otherwise re-execute the whole merge aggregation
-    # over the mentions table. eager=False so a fully-resumed run (every
-    # stage complete on disk) never materializes it at all.
-    relations_full = merge_relations(raw_relations).localCheckpoint(eager=False)
+
+    # The full relation-merge frame has THREE consumers (entity-stub
+    # derivation, the finalized relations stage, canonicalize), each of which
+    # would otherwise re-execute the merge aggregation over the mentions
+    # table, so it is checkpointed. Under AQE even localCheckpoint(eager=False)
+    # runs the merge's shuffle stages when called, so it is called only
+    # inside the stage builds that consume it: a fully resumed run never
+    # runs the merge.
+    @functools.cache
+    def relations_full():
+        return merge_relations(raw_relations).localCheckpoint(eager=False)
+
     entities = stage(
         "entities",
-        lambda: stub_missing_endpoints(merge_entities(raw_entities), relations_full),
+        lambda: stub_missing_endpoints(merge_entities(raw_entities), relations_full()),
     )
-    relations = stage("relations", lambda: finalize_relations(relations_full))
+    stage("relations", lambda: finalize_relations(relations_full()))
 
     if with_linking:
         alias_map = stage("alias_map", lambda: build_alias_map(entities))
-        # canonicalize consumes merge-internal columns → recompute the full
-        # relations frame from the persisted mentions stage (cheap: one agg)
-        ents_c, rels_c = canonicalize(entities, relations_full, alias_map)
-        stage("entities_canonical", lambda: ents_c)
-        stage("relations_canonical", lambda: rels_c)
+
+        # canonicalize consumes merge-internal columns → the full relations
+        # frame, not the finalized stage; each stage writes one of its outputs
+        stage(
+            "entities_canonical",
+            lambda: canonicalize(entities, relations_full(), alias_map)[0],
+        )
+        stage(
+            "relations_canonical",
+            lambda: canonicalize(entities, relations_full(), alias_map)[1],
+        )
 
     return stage.results
-

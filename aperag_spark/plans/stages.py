@@ -6,7 +6,10 @@ each stage is a table at `<out_dir>/<stage>/` written with a `_pid`
 (Spark partition id) column, plus a `_MANIFEST.json` recording the input
 fingerprint, code version, row count and per-partition row counts. The
 manifest is written only after the table write completes, so it is the
-stage's commit point:
+stage's commit point. The write is the commit's only Spark job: the table
+is re-read in the written frame's schema, and the per-partition counts come
+from the table's own metadata (parquet footers: each writer task's `_pid`
+is one value per row group), never from a second pass over the rows:
 
   * `StageRunner` resumes or writes: a stage whose manifest matches the
     run's input fingerprint and code version is read back, otherwise it is
@@ -28,7 +31,9 @@ restart and is skipped, so Spark's at-least-once foreachBatch becomes an
 exactly-once fold (the Spark form of reconciler.py:101-169's CAS).
 
 Storage goes through sources/io (Iceberg when configured, parquet
-directories otherwise); the layouts above are format-agnostic.
+directories otherwise); the layouts above are format-agnostic. An Iceberg
+stage has no footers this module owns, so its per-partition counts take a
+Spark count.
 """
 
 from __future__ import annotations
@@ -41,7 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from aperag_spark import __version__
-from aperag_spark.sources.io import read_table, write_table
+from aperag_spark.sources.io import key_counts, read_table, write_table
 
 MANIFEST = "_MANIFEST.json"
 PID_COL = "_pid"
@@ -65,15 +70,19 @@ def write_stage(
 ) -> DataFrame:
     """Write stage output + lineage manifest; return the re-read DataFrame
     so downstream stages consume the materialized (checkpointed) table,
-    cutting lineage exactly at stage boundaries."""
+    cutting lineage exactly at stage boundaries.
+
+    The write is the commit's only Spark job: the re-read takes the written
+    frame's schema (no inference job) and the per-partition counts come
+    from the table's own metadata (`sources.io.key_counts`)."""
     spark = df.sparkSession
     path = os.path.join(out_dir, stage)
     t0 = time.time()
-    write_table(df.withColumn(PID_COL, F.spark_partition_id()), path)
-    written = read_table(spark, path)
+    tagged = df.withColumn(PID_COL, F.spark_partition_id())
+    write_table(tagged, path)
+    written = read_table(spark, path, schema=tagged.schema)
     per_partition = {
-        str(r[PID_COL]): r["cnt"]
-        for r in written.groupBy(PID_COL).agg(F.count(F.lit(1)).alias("cnt")).collect()
+        str(pid): n for pid, n in key_counts(spark, path, PID_COL).items()
     }
     manifest = {
         "stage": stage,
@@ -194,7 +203,11 @@ class SnapshotLog:
         dirs behind (the pointer never swung); reading them back during the
         replay would double-count the batch's own rows, so a fold reads
         strictly-prior batches and unions its own in-flight frames
-        explicitly."""
+        explicitly.
+
+        Every batch is read in `schema`, the table's current schema: a
+        column that state written by older code lacks reads as null, for
+        the fold to backfill."""
         path = os.path.join(self.out_dir, name)
         done = [
             e
@@ -202,7 +215,9 @@ class SnapshotLog:
             if e.startswith("batch=") and int(e.split("=", 1)[1]) < before
         ]
         if done:
-            return self.spark.read.parquet(*[os.path.join(path, e) for e in done])
+            return self.spark.read.schema(schema).parquet(
+                *[os.path.join(path, e) for e in done]
+            )
         return self.spark.createDataFrame([], schema)
 
     def commit(self, batch_id: int, **paths: str) -> None:

@@ -11,7 +11,9 @@ resolves the format at runtime:
   * default → parquet directory per stage; stage identity = the manifest's
     input fingerprint (plans/pipeline).
 
-Everything above this module (stages, manifests, resume) is format-agnostic.
+Everything above this module (stages, manifests, resume) is format-agnostic;
+`key_counts` answers a stage manifest's per-partition row counts in the
+format's own way (parquet footers, or a Spark count for Iceberg).
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def table_format() -> str:
@@ -66,7 +69,58 @@ def write_table(df: DataFrame, location: str, table_name: str | None = None) -> 
         df.write.mode("overwrite").parquet(location)
 
 
-def read_table(spark: SparkSession, location: str, table_name: str | None = None) -> DataFrame:
+def read_table(
+    spark: SparkSession,
+    location: str,
+    table_name: str | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Read a stage output. A known `schema` (the frame that was written)
+    skips parquet's schema-inference job."""
     if table_format() == "iceberg":
         return spark.read.table(table_name or _default_ident(location))
-    return spark.read.parquet(location)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(location)
+
+
+def key_counts(
+    spark: SparkSession, location: str, key: str, table_name: str | None = None
+) -> dict[int, int]:
+    """Rows per value of the integer column `key` in a written table. Parquet
+    directories answer from their footers (no Spark job): every row group
+    must carry `key` statistics with min == max, which holds when each
+    writer task stamps its own constant key (plans/stages' `_pid`). Iceberg
+    tables have no footers this module owns, so they count with Spark."""
+    if table_format() == "iceberg":
+        rows = read_table(spark, location, table_name).groupBy(key).count().collect()
+        return {r[key]: r["count"] for r in rows}
+    return parquet_key_counts(location, key)
+
+
+def parquet_key_counts(location: str, key: str) -> dict[int, int]:
+    """`key_counts` from the parquet footers under directory `location`;
+    raises ValueError when a row group's `key` statistics are missing or
+    span two values (a count is never guessed)."""
+    import pyarrow.parquet as pq
+
+    counts: dict[int, int] = {}
+    for name in sorted(os.listdir(location)):
+        if name.startswith(("_", ".")):  # _SUCCESS, _MANIFEST.json, .crc files
+            continue
+        meta = pq.read_metadata(os.path.join(location, name))
+        if key not in meta.schema.names:
+            raise ValueError(f"{name}: no '{key}' column")
+        col = meta.schema.names.index(key)
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            if group.num_rows == 0:
+                continue
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max:
+                raise ValueError(f"{name}: row group {g} has no '{key}' statistics")
+            if stats.min != stats.max:
+                raise ValueError(
+                    f"{name}: row group {g} spans '{key}' {stats.min}..{stats.max}"
+                )
+            counts[stats.min] = counts.get(stats.min, 0) + group.num_rows
+    return counts

@@ -489,6 +489,7 @@ def run_streaming_neardup(
     from aperag_spark.operators.corpus import (
         DEDUP_CLUSTER_T,
         MINHASH_BUCKET_CAP,
+        MINHASH_DOC_SCHEMA,
         bucket_pairs,
         cluster_verdict,
         minhash_docs,
@@ -539,12 +540,19 @@ def run_streaming_neardup(
         )
         pairs = po.unionByName(pn).distinct()
         # verify on committed signatures ∪ this batch's own (shared op;
-        # same round-6 contract as the batch candidates path)
-        sigs_all = log.committed(
-            "sigs",
-            "doc_id bigint, hs array<string>, hl array<long>, mh array<string>",
-            bid,
-        ).unionByName(md)
+        # same round-6 contract as the batch candidates path). Signatures
+        # committed before the int64 tokens existed read back without `hl`:
+        # rebuild it from `hs`, the same 8 digest bytes as hex
+        sigs_all = (
+            log.committed("sigs", MINHASH_DOC_SCHEMA, bid)
+            .withColumn(
+                "hl",
+                F.coalesce(
+                    "hl", F.transform("hs", lambda h: F.conv(h, 16, -10).cast("long"))
+                ),
+            )
+            .unionByName(md)
+        )
         edges = (
             verify_jaccard(pairs, sigs_all)
             .where(F.col("jaccard") >= F.lit(thr))

@@ -1,6 +1,8 @@
 """Connected components (M1) and alias linking/canonicalization (M13) —
 includes the FIXTURES.md F5 component fixture and the alias-collapse cases."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -34,6 +36,17 @@ def test_cc_long_chain_converges(spark):
     cc = connected_components(edges, max_iter=30)
     comps = {r["component"] for r in cc.collect()}
     assert comps == {"n00"}  # one component, min-id label
+
+
+def test_cc_raises_when_max_iter_cuts_it_short(spark):
+    # a 40-node path needs several rounds; one round leaves labels moving
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)], "src string, dst string"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1 rounds") as err:
+        connected_components(edges, max_iter=1)
+    changed = int(re.search(r"(\d+) labels changed", str(err.value)).group(1))
+    assert 0 < changed <= 41
 
 
 def test_cc_handles_cycles_and_self_loops(spark):

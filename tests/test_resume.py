@@ -74,3 +74,19 @@ def test_manifests_record_per_partition_lineage(spark, pages, tmp_path):
         m = metrics[stage]
         assert m["rows"] == sum(m["partitions"].values())
         assert m["input_fingerprint"] == "v" and m["wall_sec"] > 0
+
+
+def test_fully_resumed_run_only_reads_its_stages(spark, pages, tmp_path):
+    """A run whose every stage is on disk reads them back and computes
+    nothing: at most one job per stage (the parquet schema read)."""
+    out = str(tmp_path / "complete")
+    run_pipeline(spark, pages, out, input_fingerprint="v")
+    sc = spark.sparkContext
+    sc.setJobGroup("fully-resumed", "run_pipeline over complete stages")
+    try:
+        resumed = run_pipeline(spark, pages, out, input_fingerprint="v")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("fully-resumed")
+    assert len(resumed) == 8
+    assert len(jobs) <= len(resumed), f"{len(jobs)} jobs for {len(resumed)} stages"

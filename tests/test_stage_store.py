@@ -2,14 +2,19 @@
 engines and the one manifest reader. The resume runner is covered by
 tests/test_resume.py and tests/test_corpus_pipeline.py, the stream
 snapshot log by the replay and crash tests in
-tests/test_streaming_multimodal.py."""
+tests/test_streaming_multimodal.py. Here: the manifest's per-partition
+counts, which a stage commit reads from the parquet footers."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
 from aperag_spark.api import KGEngine
 from aperag_spark.plans.stages import read_manifests, write_stage
+from aperag_spark.sources.io import parquet_key_counts
 
 
 def test_kgengine_refuses_a_stage_without_manifest(spark, tmp_path):
@@ -37,3 +42,43 @@ def test_read_manifests_skips_incomplete_stages(spark, tmp_path):
     assert set(read_manifests(out)) == {"done"}
     assert read_manifests(str(tmp_path / "absent")) == {}
 
+
+
+def test_manifest_counts_match_spark_with_an_empty_partition(spark, tmp_path):
+    out = str(tmp_path / "counts")
+    # 5 partitions of 20 ids; the filter empties partition 2 entirely
+    df = spark.range(0, 100, 1, 5).where((F.col("id") < 40) | (F.col("id") >= 60))
+    written = write_stage(df, out, "s", "fp")
+    m = read_manifests(out)["s"]
+    spark_counts = {
+        str(r["_pid"]): r["count"]
+        for r in spark.read.parquet(f"{out}/s").groupBy("_pid").count().collect()
+    }
+    assert m["partitions"] == spark_counts
+    assert "2" not in m["partitions"] and len(m["partitions"]) == 4
+    assert m["rows"] == sum(m["partitions"].values()) == written.count() == 80
+    # the re-read takes the written frame's schema: same as inferring it
+    assert written.schema == spark.read.parquet(f"{out}/s").drop("_pid").schema
+
+
+def test_zero_row_stage_manifest(spark, tmp_path):
+    out = str(tmp_path / "empty")
+    written = write_stage(spark.range(0, 0, 1, 3), out, "s", "fp")
+    m = read_manifests(out)["s"]
+    assert m["rows"] == 0 and m["partitions"] == {}
+    assert written.count() == 0 and written.columns == ["id"]
+
+
+def test_footer_count_refuses_a_file_spanning_two_partitions(tmp_path):
+    path = tmp_path / "mixed"
+    path.mkdir()
+    pq.write_table(pa.table({"_pid": [0, 0, 1], "x": [1, 2, 3]}), path / "part-0.parquet")
+    with pytest.raises(ValueError, match="spans '_pid' 0..1"):
+        parquet_key_counts(str(path), "_pid")
+    pq.write_table(
+        pa.table({"_pid": [3, 3]}), path / "part-0.parquet", write_statistics=False
+    )
+    with pytest.raises(ValueError, match="no '_pid' statistics"):
+        parquet_key_counts(str(path), "_pid")
+    pq.write_table(pa.table({"_pid": [3, 3]}), path / "part-0.parquet")
+    assert parquet_key_counts(str(path), "_pid") == {3: 2}

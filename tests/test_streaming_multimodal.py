@@ -509,6 +509,61 @@ def test_streaming_neardup_matches_batch_cluster(spark, tmp_path):
     assert ptr2 == ptr
 
 
+def test_streaming_neardup_restarts_over_pre_hl_state(spark, tmp_path):
+    """Signature state written before the int64 `hl` token column existed
+    (sigs rows carry only doc_id, hs, mh) must not break a restarted fold:
+    the restart rebuilds hl from hs and reaches the verdicts of a run that
+    never had old state."""
+    import os
+    import random
+    import shutil
+
+    from aperag_spark.streaming.stream import run_streaming_neardup
+
+    rng = random.Random(0)
+    vocab = [f"w{i}" for i in range(400)]
+    base = {i: " ".join(rng.choices(vocab, k=60)) for i in range(8)}
+    # batch 1 re-sends batch 0's docs 0..3 with their last word changed:
+    # each is a near-dup of a doc whose signature is in the old state
+    later = {100 + i: base[i].rsplit(" ", 1)[0] + " tail" for i in range(4)}
+
+    def _slice(docs):
+        return spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+
+    staged = str(tmp_path / "staged")
+    _write_doc_batches(staged, [_slice(base), _slice(later)])
+    old_dir, clean_dir = str(tmp_path / "docs_old"), str(tmp_path / "docs_clean")
+    _write_doc_batches(clean_dir, [_slice(base), _slice(later)])
+    os.makedirs(old_dir)
+    shutil.copy2(f"{staged}/b000.parquet", old_dir)
+
+    out, ckpt = str(tmp_path / "nd_old"), str(tmp_path / "ck_old")
+    run_streaming_neardup(spark, old_dir, out, ckpt)
+    # rewrite batch 0's signatures the way the pre-hl code wrote them
+    sigs0 = f"{out}/sigs/batch=0"
+    spark.read.parquet(sigs0).drop("hl").write.parquet(sigs0 + "_old")
+    shutil.rmtree(sigs0)
+    os.rename(sigs0 + "_old", sigs0)
+    assert "hl" not in spark.read.parquet(sigs0).columns
+
+    shutil.copy2(f"{staged}/b001.parquet", old_dir)
+    ptr = run_streaming_neardup(spark, old_dir, out, ckpt)
+    clean = run_streaming_neardup(
+        spark, clean_dir, str(tmp_path / "nd_clean"), str(tmp_path / "ck_clean")
+    )
+    assert ptr["batch_id"] == clean["batch_id"] == 1
+    got, want = (
+        {
+            (r["doc_id"], r["canonical_id"], r["keep"])
+            for r in spark.read.parquet(p["verdicts"]).collect()
+        }
+        for p in (ptr, clean)
+    )
+    assert got == want
+    # the cross-batch near-dups were found against the old-schema state
+    assert {d for d, _, keep in got if not keep} == set(later)
+
+
 def test_streaming_neardup_bucket_freeze(spark, tmp_path):
     """Prefix-cap semantics: once a bucket would overflow the cap it
     freezes — docs arriving later into a frozen bucket produce NO new
