@@ -114,10 +114,15 @@ def extract_mentions(
 # Everything from a page to its mentions is per-page local (html → clean_text
 # → doc_id → token windows → dict-collapse → extraction), so one mapInArrow
 # can run it all. The per-page logic lives in `_narrow_page` and
-# `_add_mentions`; `extract_narrow` (the staged pipeline's texts, chunks and
-# mentions) and `extract_mentions_fused` (mentions only) both call them. The
-# staged operators extract_texts / chunk_texts / extract_mentions above stay
-# as the independent form both kernels are tested against.
+# `_add_mentions`; two kernels call them:
+#   * `extract_narrow` — the staged pipeline's texts, chunks and mentions
+#     (run_pipeline);
+#   * `extract_mentions_fused` — mentions only: run_pipeline(fuse_narrow=True)
+#     and every micro-batch of the stream (streaming.stream.streaming_mentions,
+#     the extraction of run_incremental_graph_stream and run_stream_to_table).
+# The stream's windowed_chunk_rate calls `_narrow_page` itself. The staged
+# operators extract_texts / chunk_texts / extract_mentions above stay as the
+# independent form both kernels are tested against.
 
 # kind-tagged union of the three narrow stages (split_narrow projects them):
 #   text:   url, warc_ts, lang, doc_id, text
@@ -297,7 +302,8 @@ def extract_mentions_fused(
     """Fused narrow pipeline: pages → mentions in ONE mapInArrow — the
     manual operator fusion SURVEY.md §4 anticipates. It runs extract_narrow's
     per-page logic but emits only the mention rows, for runs that keep no
-    texts/chunks stage (run_pipeline(fuse_narrow=True), throughput benches).
+    texts/chunks stage (run_pipeline(fuse_narrow=True), the stream's
+    micro-batches, throughput benches).
     mapInArrow (not mapInPandas) skips pandas DataFrame construction +
     conversion on both sides of the hot stage (~10% measured at 20k pages)."""
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 
 from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
 from aperag_spark.operators.merge import (
+    _entity_levels,
     _summarized_by_string,
     merge_relations,
 )
@@ -47,47 +48,13 @@ def merge_entities_incremental(
     """New-batch mention rows + previous `entities` snapshot → merged
     entities with reference fold-in semantics.
 
-    ONE pass over the raw mention rows: a (entity_name, entity_type)-keyed
-    level-1 aggregation carries the per-type fragment/provenance sets, the
-    vote count and the first-occurrence key; the per-entity merge re-folds
-    the level-1 sets (set union is associative, min-of-min == min,
-    sum-of-count == count) and the type vote reads level-1 directly. The
-    former shape called merge_entities() (whose type vote is DEAD here —
-    the voted type is recomputed with the existing snapshot folded in, and
-    merge_entities' winner join is 1:1 so dropping it is value-identical)
-    and re-aggregated the raw rows a third time for the vote: three
-    scan+explode passes over the batch where one suffices. Level-1 is
-    lazily checkpointed — it is tiny (distinct (name, type) pairs) and
-    feeds both the merge and the vote."""
-    lvl1 = (
-        raw_entities.groupBy("entity_name", "entity_type")
-        .agg(
-            F.array_sort(F.collect_set("description")).alias("d"),
-            F.array_sort(F.collect_set("source_id")).alias("s"),
-            F.array_sort(F.collect_set("file_path")).alias("f"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(
-                F.struct(
-                    F.col("file_path").alias("u"),
-                    F.col("chunk_order_index").alias("c"),
-                    F.col("record_idx").alias("r"),
-                )
-            ).alias("first_occ"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    new = lvl1.groupBy("entity_name").agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("d")))).alias(
-            "description_frags"
-        ),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("s")))).alias(
-            "source_ids"
-        ),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("f")))).alias(
-            "file_paths"
-        ),
-        F.sum("cnt").alias("mention_count"),
-    )
+    ONE pass over the raw mention rows: the batch merge's own level-1 and
+    per-entity aggregation (merge._entity_levels, min-of-min == min), and
+    the type vote reads level-1 directly with the existing type folded in.
+    merge_entities() itself is not called: its type vote would be dead
+    here, since the vote is recomputed with the existing snapshot folded
+    in."""
+    lvl1, new = _entity_levels(raw_entities)
 
     # re-vote including the existing type as one count, losing ties to new
     # (Counter appends existing AFTER new — operate.py:296-301)

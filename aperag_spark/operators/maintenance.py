@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
 from aperag_spark.operators.extraction import split_mentions
 from aperag_spark.operators.merge import (
-    _summarized_description,
+    _summarized_by_string,
     merge_entities,
     merge_relations,
     stub_missing_endpoints,
@@ -132,7 +132,7 @@ def merge_entities_salted(
         merged.join(winner, "entity_name")
         .withColumn(
             "description",
-            _summarized_description("description_frags", summary_threshold),
+            _summarized_by_string("description_frags", summary_threshold),
         )
         .select(
             F.col("entity_name").alias("entity_id"),

@@ -58,28 +58,16 @@ def _summarized_by_string(frags_col: str, threshold: int):
     ).otherwise(joined)
 
 
-# Backwards-compatible alias (round-1 name).
-_summarized_description = _summarized_by_string
-
-
-def merge_entities(
-    raw_entities: DataFrame,
-    summary_threshold: int = FORCE_LLM_SUMMARY_ON_MERGE,
-) -> DataFrame:
-    """raw mention rows → one row per entity_name.
-
-    ONE aggregation pass over the raw rows: the (entity_name, entity_type)
-    level-1 aggregate carries the per-type fragment/provenance sets, the
-    vote count and the first-occurrence key; the per-entity merge re-folds
-    the level-1 sets (set union is associative, sum-of-count == count) and
-    the M3 type vote is a window over level-1 directly. The former two
-    independent aggregations (fragment merge by name + vote by name,type)
-    could not share an exchange — different keys — so the raw mention
-    explode upstream executed twice. Level-1 is tiny (distinct (name, type)
-    pairs) and lazily checkpointed for its two consumers. Skewed head
-    entities are split by AQE (partial aggregation happens map-side, so the
-    hot key's reducer sees combined per-type sets).
-    """
+def _entity_levels(raw_entities: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """ONE aggregation pass over raw entity mention rows, shared by the batch
+    merge and the incremental fold-in (operators/incremental.py): the
+    (entity_name, entity_type) level-1 aggregate carries the per-type
+    fragment/provenance sets, the vote count and the first-occurrence key;
+    the per-entity merge re-folds the level-1 sets (set union is
+    associative, sum-of-count == count). Level-1 is tiny (distinct (name,
+    type) pairs) and lazily checkpointed for its two consumers: the merge
+    and the M3 type vote, a window over level-1. Returns (level-1,
+    per-entity)."""
     lvl1 = (
         raw_entities.groupBy("entity_name", "entity_type")
         .agg(
@@ -91,16 +79,6 @@ def merge_entities(
         )
         .localCheckpoint(eager=False)
     )
-    # M3: vote. Counter + stable sort desc == (count desc, first-seen asc)
-    w = Window.partitionBy("entity_name").orderBy(
-        F.desc("cnt"), F.asc("first_occ")
-    )
-    winner = (
-        lvl1.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("entity_name", "entity_type")
-    )
-
     merged = lvl1.groupBy("entity_name").agg(
         F.array_sort(F.array_distinct(F.flatten(F.collect_list("d")))).alias(
             "description_frags"
@@ -113,11 +91,38 @@ def merge_entities(
         ),
         F.sum("cnt").alias("mention_count"),
     )
+    return lvl1, merged
+
+
+def merge_entities(
+    raw_entities: DataFrame,
+    summary_threshold: int = FORCE_LLM_SUMMARY_ON_MERGE,
+) -> DataFrame:
+    """raw mention rows → one row per entity_name.
+
+    ONE aggregation pass over the raw rows (_entity_levels); the M3 type
+    vote is a window over its level-1 aggregate. A vote keyed by
+    (name, type) and a merge keyed by name could not share an exchange, so
+    two independent aggregations would run the raw mention explode
+    upstream twice. Skewed head entities are split by AQE (partial
+    aggregation happens map-side, so the hot key's reducer sees combined
+    per-type sets).
+    """
+    lvl1, merged = _entity_levels(raw_entities)
+    # M3: vote. Counter + stable sort desc == (count desc, first-seen asc)
+    w = Window.partitionBy("entity_name").orderBy(
+        F.desc("cnt"), F.asc("first_occ")
+    )
+    winner = (
+        lvl1.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("entity_name", "entity_type")
+    )
 
     return (
         merged.join(winner, "entity_name")
         .withColumn(
-            "description", _summarized_description("description_frags", summary_threshold)
+            "description", _summarized_by_string("description_frags", summary_threshold)
         )
         .select(
             F.col("entity_name").alias("entity_id"),
@@ -178,7 +183,7 @@ def merge_relations(
         merged.withColumn("keywords", F.array_join("keyword_arr", ","))
         .withColumn("pre_summary_description", F.array_join("description_frags", GRAPH_FIELD_SEP))
         .withColumn(
-            "description", _summarized_description("description_frags", summary_threshold)
+            "description", _summarized_by_string("description_frags", summary_threshold)
         )
         .select(
             "src_id",

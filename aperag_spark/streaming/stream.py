@@ -3,29 +3,36 @@ of the batch pipeline.
 
 The reference has no streaming path (SURVEY.md §2.8): new documents arrive
 via Celery tasks one at a time (lightrag_manager.py:113-118). The rebuild's
-analog is a file-source stream over the pages table: each micro-batch runs
-the same narrow extract→chunk→mention operators (identical code, identical
-semantics — mapInPandas is streaming-compatible), while the merge
-aggregations run either as windowed streaming aggregates (monitoring) or as
-periodic batch re-aggregation over the accumulated mention log (the
-mentions table is append-only; entity/relation merges are associative
-re-aggregations, so batch-recompute over appended data == the reference's
-incremental upsert semantics, M7).
+analog is a file-source stream over the pages table. Each micro-batch runs
+the batch pipeline's own kernels, not a copy of them:
+
+  * extraction: pages → mentions is extraction.extract_mentions_fused, one
+    mapInArrow per task (mapInArrow is streaming-compatible), the same
+    kernel the staged build's extract_narrow shares its per-page logic with;
+  * merging: run_incremental_graph_stream folds each micro-batch into the
+    persistent snapshot with the M7 incremental merge
+    (operators/incremental.py), the reference's merge-with-existing upsert;
+  * monitoring: windowed_chunk_rate counts chunks with the same per-page
+    chunker (extraction._narrow_page), so its counts equal the chunks
+    stage's.
 
 Watermarking: warc_ts bounds late data; host-windowed counts demonstrate
-the stateful path.
+the stateful aggregation path, and streaming_exact_dedup the custom
+stateful operator (applyInPandasWithState).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from aperag_spark.operators.chunking import chunk_texts, extract_texts
-from aperag_spark.operators.extraction import extract_mentions
+from aperag_spark import CHUNK_OVERLAP_TOKEN_SIZE, CHUNK_TOKEN_SIZE
+from aperag_spark.operators.extraction import _narrow_page, extract_mentions_fused
 from aperag_spark.plans.stages import SnapshotLog
 from aperag_spark.session import ensure_package_shipped
 from aperag_spark.synth import PAGES_SCHEMA
+from aperag_spark.textproc import get_tokenizer
 
 
 def read_pages_stream(
@@ -41,11 +48,11 @@ def read_pages_stream(
 
 
 def streaming_mentions(pages_stream: DataFrame, workspace: str = "") -> DataFrame:
-    """The stateless prefix of the pipeline applied to a stream — identical
-    operator code as batch (extract_texts/chunk_texts/extract_mentions)."""
-    texts = extract_texts(pages_stream, workspace)
-    chunks = chunk_texts(texts, workspace)
-    return extract_mentions(chunks)
+    """The stateless prefix of the pipeline applied to a stream (or a batch
+    frame): pages → mentions in one Python pass, the fused batch kernel
+    extract_mentions_fused. Row for row equal to extract_texts →
+    chunk_texts → extract_mentions (tests/test_fused.py)."""
+    return extract_mentions_fused(pages_stream, workspace)
 
 
 def windowed_chunk_rate(
@@ -57,39 +64,36 @@ def windowed_chunk_rate(
     """Watermarked windowed aggregate: chunks/tokens per host per window —
     the monitoring aggregate for a continuous-indexing deployment.
 
-    Per-doc chunk stats come from one narrow mapInPandas (warc_ts carried
-    through) — a stream-stream join back to texts would be disallowed in
-    complete mode and needlessly stateful in append mode."""
-    import pandas as pd
-
-    from aperag_spark.textproc import chunking_by_token_size, get_tokenizer
-
-    texts = extract_texts(pages_stream, workspace)
+    Per-doc chunk stats come from one narrow mapInArrow over the en pages
+    (warc_ts carried through) that chunks each page with the chunks stage's
+    own per-page logic, duplicate chunk ids collapsed — a stream-stream join
+    back to texts would be disallowed in complete mode and needlessly
+    stateful in append mode."""
 
     def _stats(batches):
-        tok = get_tokenizer()
-        for pdf in batches:
-            rows = []
-            for url, ts, text in zip(pdf["url"], pdf["warc_ts"], pdf["text"]):
-                chunks = [
-                    c
-                    for c in chunking_by_token_size(
-                        tok, text, overlap_token_size=100, max_token_size=1200
-                    )
-                    if c["content"]
-                ]
-                rows.append(
-                    {
-                        "url": url,
-                        "warc_ts": ts,
-                        "n_chunks": len(chunks),
-                        "n_tokens": sum(c["tokens"] for c in chunks),
-                    }
+        tokenizer = get_tokenizer()
+        for batch in batches:
+            n_chunks, n_tokens = [], []
+            for html in batch.column("html").to_pylist():
+                _, _, chunks = _narrow_page(
+                    tokenizer, html, workspace, CHUNK_TOKEN_SIZE, CHUNK_OVERLAP_TOKEN_SIZE
                 )
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "n_chunks", "n_tokens"])
+                n_chunks.append(len(chunks))
+                n_tokens.append(sum(ch["tokens"] for ch in chunks.values()))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url"),
+                    batch.column("warc_ts"),
+                    pa.array(n_chunks, pa.int64()),
+                    pa.array(n_tokens, pa.int64()),
+                ],
+                names=["url", "warc_ts", "n_chunks", "n_tokens"],
+            )
 
-    stats = texts.mapInPandas(
-        _stats, "url string, warc_ts timestamp, n_chunks long, n_tokens long"
+    stats = (
+        pages_stream.where(F.col("lang") == "en")
+        .select("url", "warc_ts", "html")
+        .mapInArrow(_stats, "url string, warc_ts timestamp, n_chunks long, n_tokens long")
     )
     return (
         stats.withColumn("host", F.parse_url("url", F.lit("HOST")))
@@ -106,199 +110,6 @@ def windowed_chunk_rate(
             "n_chunks",
             "n_tokens",
         )
-    )
-
-
-ENTITY_STATE_SCHEMA = (
-    "mention_count long, type_names array<string>, type_counts array<long>, "
-    "type_occ_fp array<string>, type_occ_coi array<long>, type_occ_ri array<long>, "
-    "description_frags array<string>, source_ids array<string>"
-)
-
-ENTITY_OUT_SCHEMA = (
-    "entity_id string, entity_type string, description string, "
-    "description_frags array<string>, source_ids array<string>, mention_count long"
-)
-
-
-def streaming_entity_merge(mentions_stream: DataFrame, summary_threshold: int = 10) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): per
-    entity_name, fold each micro-batch's mention rows into persistent merge
-    state with the SAME semantics as the batch merge (operators/merge.py,
-    M2-M6) and the incremental fold-in (M7):
-
-      * mention_count accumulates;
-      * type vote = (count desc, first-occurrence asc) — the occurrence key
-        (file_path, chunk_order_index, record_idx) is carried in state so
-        the winner is deterministic regardless of micro-batch arrival order
-        (operate.py:296-301);
-      * description = sorted-set fragments, '<SEP>'-joined, LLM-summary stub
-        when the SEP-count reaches the threshold (operate.py:303-316);
-      * source_ids = set union (operate.py:306-310).
-
-    Emits the entity's refreshed merged row every time its group receives
-    rows (outputMode 'update'). State never expires (a KG entity is
-    long-lived); at 100 TB the state store is RocksDB-backed and partitioned
-    by the same shuffle key as the batch merge."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ents = mentions_stream.where(F.col("kind") == "entity").select(
-        "entity_name",
-        "entity_type",
-        "description",
-        "source_id",
-        "file_path",
-        "chunk_order_index",
-        "record_idx",
-    )
-
-    def _update(key, pdfs, state: GroupState):
-        from aperag_spark.textproc import stub_summarize
-
-        if state.exists:
-            (cnt, t_names, t_counts, o_fp, o_coi, o_ri, frags, srcs) = state.get
-            # occurrence kept as a REAL (fp, coi, ri) tuple: python tuple
-            # comparison == Spark struct comparison (UTF-8 byte order for
-            # strings, numeric for ints) — a concatenated string key would
-            # mis-order when one file_path is a prefix of another
-            type_state = {
-                n: [c, (fp, coi, ri)]
-                for n, c, fp, coi, ri in zip(t_names, t_counts, o_fp, o_coi, o_ri)
-            }
-            frag_set, src_set = set(frags), set(srcs)
-        else:
-            cnt, type_state, frag_set, src_set = 0, {}, set(), set()
-        for pdf in pdfs:
-            cnt += len(pdf)
-            for t, d, s, fp, coi, ri in zip(
-                pdf["entity_type"], pdf["description"], pdf["source_id"],
-                pdf["file_path"], pdf["chunk_order_index"], pdf["record_idx"],
-            ):
-                occ = (fp, int(coi), int(ri))
-                if t in type_state:
-                    type_state[t][0] += 1
-                    type_state[t][1] = min(type_state[t][1], occ)
-                else:
-                    type_state[t] = [1, occ]
-                frag_set.add(d)
-                src_set.add(s)
-        names = sorted(type_state)
-        state.update((
-            cnt,
-            names,
-            [type_state[n][0] for n in names],
-            [type_state[n][1][0] for n in names],
-            [type_state[n][1][1] for n in names],
-            [type_state[n][1][2] for n in names],
-            sorted(frag_set),
-            sorted(src_set),
-        ))
-        winner = min(type_state.items(), key=lambda kv: (-kv[1][0], kv[1][1]))[0]
-        joined = "<SEP>".join(sorted(frag_set))
-        n_frag = joined.count("<SEP>") + 1
-        desc = (
-            stub_summarize(joined)
-            if n_frag > 1 and n_frag >= summary_threshold
-            else joined
-        )
-        yield pd.DataFrame(
-            [{
-                "entity_id": key[0],
-                "entity_type": winner,
-                "description": desc,
-                "description_frags": sorted(frag_set),
-                "source_ids": sorted(src_set),
-                "mention_count": cnt,
-            }]
-        )
-
-    return ents.groupBy("entity_name").applyInPandasWithState(
-        _update,
-        outputStructType=ENTITY_OUT_SCHEMA,
-        stateStructType=ENTITY_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-RELATION_STATE_SCHEMA = (
-    "weight double, description_frags array<string>, keywords array<string>, "
-    "source_ids array<string>"
-)
-
-RELATION_OUT_SCHEMA = (
-    "src_id string, tgt_id string, weight double, description string, "
-    "keywords string, source_ids array<string>"
-)
-
-
-def streaming_relation_merge(mentions_stream: DataFrame, summary_threshold: int = 10) -> DataFrame:
-    """Stateful streaming edge merge — the relation counterpart of
-    streaming_entity_merge, with batch-identical M8-M9 semantics
-    (operators/merge.merge_relations): canonical (least, greatest) pair key
-    (operate.py:553-555), weight SUM (operate.py:406), sorted-set
-    description fragments with the SEP-count summary trigger
-    (operate.py:313-316,406-429), comma-split keyword union, source-id set
-    union. Emits the refreshed merged edge per micro-batch touch."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    rels = mentions_stream.where(F.col("kind") == "relation").select(
-        F.least("src_id", "tgt_id").alias("src_id"),
-        F.greatest("src_id", "tgt_id").alias("tgt_id"),
-        "weight",
-        "description",
-        "keywords",
-        "source_id",
-    )
-
-    def _update(key, pdfs, state: GroupState):
-        from aperag_spark.textproc import stub_summarize
-
-        if state.exists:
-            (weight, frags, kws, srcs) = state.get
-            frag_set, kw_set, src_set = set(frags), set(kws), set(srcs)
-        else:
-            weight, frag_set, kw_set, src_set = 0.0, set(), set(), set()
-        for pdf in pdfs:
-            for w, d, k, s in zip(
-                pdf["weight"], pdf["description"], pdf["keywords"], pdf["source_id"]
-            ):
-                weight += float(w)
-                if d:
-                    frag_set.add(d)
-                for kw in str(k or "").split(","):
-                    kw = kw.strip()
-                    if kw:
-                        kw_set.add(kw)
-                if s:
-                    src_set.add(s)
-        state.update((weight, sorted(frag_set), sorted(kw_set), sorted(src_set)))
-        joined = "<SEP>".join(sorted(frag_set))
-        n_frag = joined.count("<SEP>") + 1
-        desc = (
-            stub_summarize(joined)
-            if n_frag > 1 and n_frag >= summary_threshold
-            else joined
-        )
-        yield pd.DataFrame(
-            [{
-                "src_id": key[0],
-                "tgt_id": key[1],
-                "weight": weight,
-                "description": desc,
-                "keywords": ",".join(sorted(kw_set)),
-                "source_ids": sorted(src_set),
-            }]
-        )
-
-    return rels.groupBy("src_id", "tgt_id").applyInPandasWithState(
-        _update,
-        outputStructType=RELATION_OUT_SCHEMA,
-        stateStructType=RELATION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

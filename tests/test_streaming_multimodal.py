@@ -20,7 +20,7 @@ def test_streaming_drain_matches_batch(spark, tmp_path):
     gen_pages_df(spark, 30, seed=11, partitions=3).write.parquet(pages_dir)
 
     from aperag_spark.operators.chunking import chunk_texts, extract_texts
-    from aperag_spark.operators.extraction import extract_mentions
+    from aperag_spark.operators.extraction import MENTIONS_SCHEMA, extract_mentions
     from aperag_spark.streaming.stream import run_stream_to_table
 
     run_stream_to_table(spark, pages_dir, out_dir, ckpt)
@@ -28,8 +28,8 @@ def test_streaming_drain_matches_batch(spark, tmp_path):
 
     batch = extract_mentions(chunk_texts(extract_texts(spark.read.parquet(pages_dir))))
     assert streamed.count() == batch.count()
-    # identical mention multiset
-    cols = ["kind", "entity_name", "src_id", "tgt_id", "source_id"]
+    # identical mention multiset, every column
+    cols = [f.split(" ")[0] for f in MENTIONS_SCHEMA.split(", ")]
     assert sorted(map(str, streamed.select(cols).collect())) == sorted(
         map(str, batch.select(cols).collect())
     )
@@ -40,10 +40,36 @@ def test_streaming_drain_matches_batch(spark, tmp_path):
     shutil.rmtree(out_dir, ignore_errors=True)
 
 
+def test_streaming_mentions_runs_one_python_pass(spark):
+    """The stream extracts with the batch kernel: pages → mentions is one
+    Python map operator (mapInArrow), not a chain of mapInPandas hops."""
+    import re
+
+    from aperag_spark.streaming.stream import streaming_mentions
+    from aperag_spark.synth import PAGES_SCHEMA, gen_pages_local
+
+    pages = spark.createDataFrame(gen_pages_local(5, seed=1), schema=PAGES_SCHEMA)
+    plan = streaming_mentions(pages)._jdf.queryExecution().executedPlan().toString()
+    python_ops = re.findall(r"\b(\w*MapIn\w+|\w*EvalPython)\b", plan)
+    assert len(python_ops) == 1, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_windowed_chunk_rate(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages_w")
-    gen_pages_df(spark, 20, seed=3, partitions=2).write.parquet(pages_dir)
+    from collections import defaultdict
+    from urllib.parse import urlparse
+
+    from aperag_spark.operators.chunking import chunk_texts, extract_texts
     from aperag_spark.streaming.stream import read_pages_stream, windowed_chunk_rate
+    from aperag_spark.synth import PAGES_SCHEMA
+    from tests.test_fused import _periodic_page
+
+    pages_dir = str(tmp_path / "pages_w")
+    # a periodic page whose token windows repeat: its chunk ids collapse
+    periodic = spark.createDataFrame([_periodic_page()], schema=PAGES_SCHEMA)
+    gen_pages_df(spark, 20, seed=3, partitions=2).unionByName(periodic).write.parquet(
+        pages_dir
+    )
 
     agg = windowed_chunk_rate(read_pages_stream(spark, pages_dir))
     # complete mode: append would only emit windows the watermark has passed,
@@ -61,6 +87,19 @@ def test_windowed_chunk_rate(spark, tmp_path):
     # watermark closes all windows under availableNow drain
     assert rows, "windowed aggregate produced no rows"
     assert all(r["n_chunks"] > 0 for r in rows)
+
+    # per host, the counts are the chunks stage's own
+    got = defaultdict(lambda: [0, 0])
+    for r in rows:
+        got[r["host"]][0] += r["n_chunks"]
+        got[r["host"]][1] += r["n_tokens"]
+    want = defaultdict(lambda: [0, 0])
+    for r in chunk_texts(extract_texts(spark.read.parquet(pages_dir))).collect():
+        host = urlparse(r["file_path"]).hostname
+        want[host][0] += 1
+        want[host][1] += r["tokens"]
+    assert "periodic.example.com" in want
+    assert dict(got) == dict(want)
 
 
 def test_decode_media_stub_contract():
@@ -82,107 +121,6 @@ def test_media_feature_extraction(spark):
     # determinism
     feats2 = {r["media_id"]: r["feature"] for r in extract_media_features(media).collect()}
     assert all(feats2[r["media_id"]] == r["feature"] for r in feats)
-
-
-def test_streaming_entity_merge_stateful_matches_batch(spark, tmp_path):
-    """applyInPandasWithState entity merge: state folded across multiple
-    micro-batches must equal the batch merge (M2-M6) on the same pages —
-    arrival order independence via the carried occurrence key."""
-    from aperag_spark.operators.chunking import chunk_texts, extract_texts
-    from aperag_spark.operators.extraction import extract_mentions, split_mentions
-    from aperag_spark.operators.merge import merge_entities
-    from aperag_spark.streaming.stream import (
-        read_pages_stream,
-        streaming_entity_merge,
-        streaming_mentions,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    pages = gen_pages_df(spark, 60, seed=11, partitions=6)
-    pages.write.parquet(pages_dir)
-
-    stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = (
-        streaming_entity_merge(streaming_mentions(stream))
-        .writeStream.format("memory")
-        .queryName("entstate")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    updates = spark.sql("select * from entstate").collect()
-    assert len(updates) > 0
-    # several micro-batches ran: at least one hot entity emitted >1 update
-    from collections import Counter
-
-    per_entity = Counter(r["entity_id"] for r in updates)
-    assert max(per_entity.values()) > 1
-    # final state per entity = the update with the highest mention_count
-    final = {}
-    for r in updates:
-        cur = final.get(r["entity_id"])
-        if cur is None or r["mention_count"] > cur["mention_count"]:
-            final[r["entity_id"]] = r
-
-    batch_pages = spark.read.parquet(pages_dir)
-    raw_e, _ = split_mentions(extract_mentions(chunk_texts(extract_texts(batch_pages))))
-    batch = {r["entity_id"]: r for r in merge_entities(raw_e).collect()}
-
-    assert set(final) == set(batch)
-    for eid, b in batch.items():
-        s = final[eid]
-        assert s["mention_count"] == b["mention_count"], eid
-        assert s["entity_type"] == b["entity_type"], eid
-        assert s["description"] == b["description"], eid
-        assert s["source_ids"] == sorted(b["source_ids"]), eid
-        assert s["description_frags"] == sorted(b["description_frags"]), eid
-
-
-def test_streaming_relation_merge_stateful_matches_batch(spark, tmp_path):
-    """Relation-side stateful merge across micro-batches equals the batch
-    M8-M9 aggregation (weight sum, frag set, keyword union, source union)."""
-    from aperag_spark.operators.chunking import chunk_texts, extract_texts
-    from aperag_spark.operators.extraction import extract_mentions, split_mentions
-    from aperag_spark.operators.merge import merge_relations
-    from aperag_spark.streaming.stream import (
-        read_pages_stream,
-        streaming_mentions,
-        streaming_relation_merge,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    gen_pages_df(spark, 60, seed=11, partitions=6).write.parquet(pages_dir)
-
-    stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = (
-        streaming_relation_merge(streaming_mentions(stream))
-        .writeStream.format("memory")
-        .queryName("relstate")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    updates = spark.sql("select * from relstate").collect()
-    final = {}
-    for r in updates:
-        k = (r["src_id"], r["tgt_id"])
-        cur = final.get(k)
-        if cur is None or r["weight"] >= cur["weight"]:
-            final[k] = r
-
-    batch_pages = spark.read.parquet(pages_dir)
-    _, raw_r = split_mentions(extract_mentions(chunk_texts(extract_texts(batch_pages))))
-    batch = {(r["src_id"], r["tgt_id"]): r for r in merge_relations(raw_r).collect()}
-
-    assert set(final) == set(batch)
-    for k, b in batch.items():
-        s = final[k]
-        assert abs(s["weight"] - b["weight"]) < 1e-9, k
-        assert s["description"] == b["description"], k
-        assert sorted(s["keywords"].split(",")) == sorted(b["keywords"].split(",")), k
-        assert s["source_ids"] == sorted(x for x in b["source_ids"]), k
 
 
 def test_incremental_graph_stream_foreachbatch(spark, tmp_path):
