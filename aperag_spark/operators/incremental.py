@@ -24,19 +24,18 @@ from pyspark.sql import DataFrame, Window
 from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
 from aperag_spark.operators.merge import (
     _entity_levels,
+    _keyword_list,
     _summarized_by_string,
     merge_relations,
 )
 
 
-def _union_arrays(a, b):
-    return F.array_sort(
-        F.array_distinct(
-            F.concat(
-                F.coalesce(a, F.array().cast("array<string>")),
-                F.coalesce(b, F.array().cast("array<string>")),
-            )
-        )
+def _union_arrays(a: str, b: str):
+    """Sorted distinct union of two string-array columns, a null side read
+    as empty; one SQL expression (see merge._occ)."""
+    empty = "cast(array() as array<string>)"
+    return F.expr(
+        f"array_sort(array_distinct(concat(coalesce(`{a}`, {empty}), coalesce(`{b}`, {empty}))))"
     )
 
 
@@ -126,10 +125,7 @@ def merge_relations_incremental(
         "tgt_id",
         F.col("weight").alias("old_weight"),
         F.array(F.col("description")).alias("old_frags"),
-        F.filter(
-            F.transform(F.split("keywords", ","), lambda x: F.trim(x)),
-            lambda x: x != "",
-        ).alias("old_keywords"),
+        _keyword_list("keywords").alias("old_keywords"),
         F.col("source_ids").alias("old_source_ids"),
         F.col("file_paths").alias("old_file_paths"),
     )

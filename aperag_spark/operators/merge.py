@@ -30,15 +30,22 @@ from pyspark.sql import DataFrame, Window
 
 from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
 
+# The helpers below are built as one SQL expression each: a column built
+# from F.* calls costs a py4j round trip per call (20-50 per helper), and a
+# stream fold builds these helpers a dozen times per micro-batch.
+
+
 def _occ():
     """Deterministic occurrence key: reproduces the reference's insertion
     order (docs sorted by url, chunks in order, records in order) under any
     shuffle."""
-    return F.struct(
-        F.col("file_path").alias("u"),
-        F.col("chunk_order_index").alias("c"),
-        F.col("record_idx").alias("r"),
-    )
+    return F.expr("named_struct('u', file_path, 'c', chunk_order_index, 'r', record_idx)")
+
+
+def _keyword_list(col: str):
+    """A relation's keywords string split on ',', trimmed, empties dropped
+    (operate.py:411-422)."""
+    return F.expr(f"filter(transform(split(`{col}`, ','), k -> trim(k)), k -> k != '')")
 
 
 def _summarized_by_string(frags_col: str, threshold: int):
@@ -50,12 +57,12 @@ def _summarized_by_string(frags_col: str, threshold: int):
     replaces the stub extractor) counts as multiple fragments in the
     reference. Shared by the batch path here and the incremental fold-in
     (operators/incremental.py), so both trigger identically."""
-    joined = F.array_join(F.col(frags_col), GRAPH_FIELD_SEP)
-    n = F.size(F.split(joined, GRAPH_FIELD_SEP))
-    return F.when(
-        (n > 1) & (n >= threshold),
-        F.concat(F.lit("SUMMARY:"), F.substring(F.md5(joined), 1, 16)),
-    ).otherwise(joined)
+    joined = f"array_join(`{frags_col}`, '{GRAPH_FIELD_SEP}')"
+    n = f"size(split({joined}, '{GRAPH_FIELD_SEP}'))"
+    return F.expr(
+        f"CASE WHEN {n} > 1 AND {n} >= {int(threshold)} "
+        f"THEN concat('SUMMARY:', substring(md5({joined}), 1, 16)) ELSE {joined} END"
+    )
 
 
 def _entity_levels(raw_entities: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -162,12 +169,7 @@ def merge_relations(
         F.array_sort(
             F.array_distinct(
                 F.flatten(
-                    F.collect_list(
-                        F.filter(
-                            F.transform(F.split("keywords", ","), lambda x: F.trim(x)),
-                            lambda x: x != "",
-                        )
-                    )
+                    F.collect_list(_keyword_list("keywords"))
                 )
             )
         ).alias("keyword_arr"),

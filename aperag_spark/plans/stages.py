@@ -28,7 +28,9 @@ directories `<name>_v<batch_id>` and per-batch state appends
 `<name>/batch=<batch_id>/`, committed by an atomically swung `LATEST`
 pointer. A micro-batch the pointer already covers is a replay after a
 restart and is skipped, so Spark's at-least-once foreachBatch becomes an
-exactly-once fold (the Spark form of reconciler.py:101-169's CAS).
+exactly-once fold (the Spark form of reconciler.py:101-169's CAS). A fold
+reads what the log wrote in the schema its footers record, with no
+inference job, and tags its jobs with the caller's job group.
 
 Storage goes through sources/io (Iceberg when configured, parquet
 directories otherwise); the layouts above are format-agnostic. An Iceberg
@@ -46,7 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from aperag_spark import __version__
-from aperag_spark.sources.io import key_counts, read_table, write_table
+from aperag_spark.sources.io import key_counts, parquet_schema, read_table, write_table
 
 MANIFEST = "_MANIFEST.json"
 PID_COL = "_pid"
@@ -173,13 +175,27 @@ class SnapshotLog:
     def fold(self, apply):
         """foreachBatch callback running `apply(batch_df, batch_id, prev)`
         with `prev` the committed pointer (None before the first commit);
-        a batch the pointer already covers is a replay and is skipped."""
+        a batch the pointer already covers is a replay and is skipped.
+
+        A streaming query runs its jobs under its own job group (which
+        `StreamingQuery.stop()` cancels by), so the fold's jobs carry the
+        job group of the thread that built the callback as a job tag
+        instead: `getJobIdsForTag(<caller's group>)` attributes them."""
+        sc = self.spark.sparkContext
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        tag = group if group and "," not in group else None  # a tag has no ','
 
         def _fold(batch_df: DataFrame, batch_id: int) -> None:
             prev = self.latest()
             if prev is not None and batch_id <= prev["batch_id"]:
                 return  # replayed batch after restart: already applied
-            apply(batch_df, batch_id, prev)
+            if tag:
+                sc.addJobTag(tag)
+            try:
+                apply(batch_df, batch_id, prev)
+            finally:
+                if tag:
+                    sc.removeJobTag(tag)
 
         return _fold
 
@@ -196,6 +212,12 @@ class SnapshotLog:
         path = os.path.join(self.out_dir, name, f"batch={batch_id}")
         df.write.mode("overwrite").parquet(path)
         return path
+
+    def read(self, path: str) -> DataFrame:
+        """A snapshot or state append this log wrote, read in the schema its
+        footers record: no parquet inference job. The log writes parquet
+        whatever the stage table format, so it reads parquet too."""
+        return self.spark.read.schema(parquet_schema(path)).parquet(path)
 
     def committed(self, name: str, schema: str, before: int) -> DataFrame:
         """State table `name` as of the batches with id < `before` ONLY. A

@@ -23,6 +23,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# where Spark's parquet writer records the written frame's schema (JSON)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def table_format() -> str:
     return os.environ.get("APERAG_SPARK_TABLE_FORMAT", "parquet").lower()
@@ -95,6 +98,21 @@ def key_counts(
         rows = read_table(spark, location, table_name).groupBy(key).count().collect()
         return {r[key]: r["count"] for r in rows}
     return parquet_key_counts(location, key)
+
+
+def parquet_schema(location: str) -> StructType:
+    """The Spark schema recorded in the footer of the first data file under
+    parquet directory `location` (Spark writes it into every file's
+    key-value metadata), read without a Spark job. Spark's file source
+    reads every column as nullable whatever schema it is given, so reading
+    in this schema gives the same frame as parquet's inference job."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    name = next(n for n in sorted(os.listdir(location)) if not n.startswith(("_", ".")))
+    meta = pq.read_metadata(os.path.join(location, name)).metadata
+    return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
 
 
 def parquet_key_counts(location: str, key: str) -> dict[int, int]:

@@ -8,10 +8,15 @@ the batch pipeline's own kernels, not a copy of them:
 
   * extraction: pages → mentions is extraction.extract_mentions_fused, one
     mapInArrow per task (mapInArrow is streaming-compatible), the same
-    kernel the staged build's extract_narrow shares its per-page logic with;
+    kernel the staged build's extract_narrow shares its per-page logic with.
+    A dropped file is one row group, so the pages are first spread
+    round-robin over every core;
   * merging: run_incremental_graph_stream folds each micro-batch into the
     persistent snapshot with the M7 incremental merge
-    (operators/incremental.py), the reference's merge-with-existing upsert;
+    (operators/incremental.py), the reference's merge-with-existing upsert.
+    A fold runs the Python extraction once: its mentions are checkpointed
+    and both merges read that copy, and the previous snapshot is read in
+    the schema its footers record (no inference job);
   * monitoring: windowed_chunk_rate counts chunks with the same per-page
     chunker (extraction._narrow_page), so its counts equal the chunks
     stage's.
@@ -51,8 +56,13 @@ def streaming_mentions(pages_stream: DataFrame, workspace: str = "") -> DataFram
     """The stateless prefix of the pipeline applied to a stream (or a batch
     frame): pages → mentions in one Python pass, the fused batch kernel
     extract_mentions_fused. Row for row equal to extract_texts →
-    chunk_texts → extract_mentions (tests/test_fused.py)."""
-    return extract_mentions_fused(pages_stream, workspace)
+    chunk_texts → extract_mentions (tests/test_fused.py).
+
+    The pages are spread round-robin over the session's default
+    parallelism first: a file drop is a single row group, so its scan is
+    one task, and the kernel would otherwise run on one core."""
+    n = pages_stream.sparkSession.sparkContext.defaultParallelism
+    return extract_mentions_fused(pages_stream.repartition(n), workspace)
 
 
 def windowed_chunk_rate(
@@ -174,6 +184,13 @@ def streaming_exact_dedup(
     )
 
 
+def _release(checkpointed: DataFrame) -> None:
+    """Free the blocks of a localCheckpoint frame once nothing reads it.
+    DataFrame.unpersist() only drops cache-manager entries, so it leaves a
+    checkpoint's RDD blocks in place until the JVM collects the RDD."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def run_incremental_graph_stream(
     spark: SparkSession,
     pages_dir: str,
@@ -203,20 +220,27 @@ def run_incremental_graph_stream(
     log = SnapshotLog(spark, out_dir)
 
     def _fold(batch_df, batch_id: int, prev: dict | None):
-        raw_e, raw_r = split_mentions(batch_df)
-        if prev is None:
-            ents = merge_entities(raw_e)
-            rels = merge_relations(raw_r)
-        else:
-            ex_e = spark.read.parquet(prev["entities"])
-            ex_r = spark.read.parquet(prev["relations"])
-            ents = merge_entities_incremental(raw_e, ex_e)
-            rels = merge_relations_incremental(raw_r, ex_r)
-        log.commit(
-            batch_id,
-            entities=log.write(ents, "entities", batch_id),
-            relations=log.write(rels.drop("first_occ"), "relations", batch_id),
-        )
+        # both merges read one materialized copy of the batch's mentions, so
+        # the Python extraction runs once per fold. Lazy: the first merge's
+        # job computes it (an eager checkpoint would be one more job)
+        mentions = batch_df.localCheckpoint(eager=False)
+        try:
+            raw_e, raw_r = split_mentions(mentions)
+            if prev is None:
+                ents = merge_entities(raw_e)
+                rels = merge_relations(raw_r)
+            else:
+                ex_e = log.read(prev["entities"])
+                ex_r = log.read(prev["relations"])
+                ents = merge_entities_incremental(raw_e, ex_e)
+                rels = merge_relations_incremental(raw_r, ex_r)
+            log.commit(
+                batch_id,
+                entities=log.write(ents, "entities", batch_id),
+                relations=log.write(rels.drop("first_occ"), "relations", batch_id),
+            )
+        finally:
+            _release(mentions)
 
     mentions = streaming_mentions(
         read_pages_stream(spark, pages_dir, max_files_per_trigger), workspace
@@ -314,7 +338,7 @@ def run_streaming_neardup(
     def _fold(batch_df, bid: int, _prev: dict | None):
         docs = batch_df.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         ids_path = log.append(docs.select("doc_id"), "ids", bid)
-        md = spark.read.parquet(log.append(minhash_docs(docs), "sigs", bid))
+        md = log.read(log.append(minhash_docs(docs), "sigs", bid))
 
         new_b = md.select(
             "doc_id", F.posexplode("mh").alias("seed", "minhash")
@@ -391,11 +415,11 @@ def run_streaming_neardup(
         # edges ∪ this batch's (tiny, bucket-capped) new edges
         edges_all = (
             log.committed("edges", "doc_a bigint, doc_b bigint", bid)
-            .unionByName(spark.read.parquet(edges_path))
+            .unionByName(log.read(edges_path))
             .localCheckpoint()  # CC iterates over it; unpersisted below
         )
         ids_all = log.committed("ids", "doc_id long", bid).unionByName(
-            spark.read.parquet(ids_path)
+            log.read(ids_path)
         )
         if edges_all.take(1):
             verdict = cluster_verdict(edges_all, ids_all, checkpoint=False)
@@ -415,10 +439,7 @@ def run_streaming_neardup(
         # a long-lived stream folds thousands of batches: release the
         # per-batch checkpointed blocks instead of pinning them forever
         for ckpt in (nb, edges_all):
-            try:
-                ckpt.unpersist()
-            except Exception:
-                pass
+            _release(ckpt)
 
     ensure_package_shipped(spark)
     docs_stream = (

@@ -4,6 +4,7 @@ checked against the independently-written port."""
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import ArrayType, StructType
 
 from aperag_spark.operators.chunking import chunk_texts, extract_texts
 from aperag_spark.operators.extraction import extract_mentions, split_mentions
@@ -91,3 +92,46 @@ def test_incremental_accumulates(result):
     g1 = run_reference_pipeline(gen_pages_local(N_PAGES, seed=SEED)[:25])
     assert set(g1["entities"]) <= set(g2["entities"])
     assert set(g1["relations"]) <= set(g2["relations"])
+
+
+def _shape(dt) -> str:
+    """simpleString with nullability: `!` marks a non-nullable field or an
+    array that holds no nulls."""
+    if isinstance(dt, StructType):
+        fields = (f"{f.name}:{_shape(f.dataType)}{'' if f.nullable else '!'}" for f in dt.fields)
+        return "struct<" + ",".join(fields) + ">"
+    if isinstance(dt, ArrayType):
+        return f"array<{_shape(dt.elementType)}{'' if dt.containsNull else '!'}>"
+    return dt.simpleString()
+
+
+ENTITIES_SHAPE = (
+    "struct<entity_id:string,entity_type:string,description:string!,"
+    "description_frags:array<string>!,source_ids:array<string>!,"
+    "file_paths:array<string>!,mention_count:bigint!>"
+)
+RELATIONS_SHAPE = (
+    "struct<src_id:string,tgt_id:string,weight:double!,description:string!,"
+    "pre_summary_description:string!,description_frags:array<string>!,"
+    "keywords:string!,keyword_arr:array<string>!,source_ids:array<string>!,"
+    "file_paths:array<string>!,first_occ:struct<u:string,c:int,r:int>>"
+)
+
+
+def test_incremental_output_schemas_are_pinned(spark, tmp_path):
+    """The fold's output schema, nullability included, whether the previous
+    snapshot is an in-memory frame or read back from parquet (as the stream
+    fold reads it): the one-expression helpers keep the F.* helpers' types."""
+    rows = gen_pages_local(10, seed=SEED)
+    raw_e1, raw_r1 = _spark_batch(spark, rows[:5])
+    raw_e2, raw_r2 = _spark_batch(spark, rows[5:])
+    rels1 = merge_relations(raw_r1)
+    ents1 = stub_missing_endpoints(merge_entities(raw_e1), rels1)
+    ents1.write.parquet(str(tmp_path / "e"))
+    rels1.drop("first_occ").write.parquet(str(tmp_path / "r"))
+    for ex_e, ex_r in [
+        (ents1, rels1),
+        (spark.read.parquet(str(tmp_path / "e")), spark.read.parquet(str(tmp_path / "r"))),
+    ]:
+        assert _shape(merge_entities_incremental(raw_e2, ex_e).schema) == ENTITIES_SHAPE
+        assert _shape(merge_relations_incremental(raw_r2, ex_r).schema) == RELATIONS_SHAPE

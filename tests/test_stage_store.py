@@ -1,9 +1,10 @@
 """The stage store (plans/stages.py): manifest-gated reads through the
 engines and the one manifest reader. The resume runner is covered by
 tests/test_resume.py and tests/test_corpus_pipeline.py, the stream
-snapshot log by the replay and crash tests in
+snapshot log's folds by the replay and crash tests in
 tests/test_streaming_multimodal.py. Here: the manifest's per-partition
-counts, which a stage commit reads from the parquet footers."""
+counts, which a stage commit reads from the parquet footers, and the
+snapshot log's job-free read."""
 
 import os
 
@@ -13,8 +14,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from aperag_spark.api import KGEngine
-from aperag_spark.plans.stages import read_manifests, write_stage
-from aperag_spark.sources.io import parquet_key_counts
+from aperag_spark.plans.stages import SnapshotLog, read_manifests, write_stage
+from aperag_spark.sources.io import parquet_key_counts, parquet_schema
 
 
 def test_kgengine_refuses_a_stage_without_manifest(spark, tmp_path):
@@ -82,3 +83,31 @@ def test_footer_count_refuses_a_file_spanning_two_partitions(tmp_path):
         parquet_key_counts(str(path), "_pid")
     pq.write_table(pa.table({"_pid": [3, 3]}), path / "part-0.parquet")
     assert parquet_key_counts(str(path), "_pid") == {3: 2}
+
+
+@pytest.mark.parametrize("rows", [3, 0])
+def test_snapshot_log_read_takes_the_footer_schema_without_a_job(spark, tmp_path, rows):
+    """SnapshotLog.read reads a snapshot in the schema its footers record:
+    the written frame's StructType, nullability included, with no parquet
+    inference job. Spark's file source reads every column as nullable, so
+    the frame equals what inference gives."""
+    log = SnapshotLog(spark, str(tmp_path / "log"))
+    df = spark.range(rows).select(
+        "id",  # not nullable
+        F.array(F.col("id").cast("string")).alias("arr"),  # array<string> without nulls
+        F.struct(F.lit(1).alias("x"), F.lit(None).cast("string").alias("y")).alias("s"),
+        F.when(F.col("id") > 1, F.lit(2.0)).alias("maybe"),  # nullable
+    )
+    path = log.write(df, "entities", 0)
+    assert parquet_schema(path) == df.schema
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "snapshot-read")
+    try:
+        read = log.read(path)
+        schema = read.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("snapshot-read") == []
+    assert schema == spark.read.parquet(path).schema
+    assert [f.nullable for f in schema.fields] == [True] * 4
+    assert sorted(read.collect()) == sorted(df.collect())

@@ -183,6 +183,71 @@ def test_incremental_graph_stream_foreachbatch(spark, tmp_path):
     assert ents3.count() >= len(ents)
 
 
+def _fold_stages(spark, after_job: int) -> list:
+    """The status store's last attempt of every stage of the jobs after
+    `after_job`, with its RDD operation graph (DOT text)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    dot = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    jobs, out, n = store.jobsList(None), [], 0
+    while n < jobs.size() and jobs.apply(n).jobId() > after_job:
+        for sid in jobs.apply(n).stageIds().mkString(",").split(","):
+            out.append((store.lastStageAttempt(int(sid)), dot(store.operationGraphForStage(int(sid)))))
+        n += 1
+    return out
+
+
+def _last_job(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_incremental_fold_runs_one_python_pass(spark, tmp_path):
+    """A fold runs the Python extraction once, spread over every core: the
+    kernel reads the drop's pages from the round-robin exchange that
+    streaming_mentions puts in front of it, so a stage that runs the kernel
+    reads that exchange. Exactly one stage of the fold does, reading each
+    page once over >= defaultParallelism tasks; every other stage whose
+    lineage holds the kernel reads the fold's checkpointed mentions."""
+    from aperag_spark.streaming.stream import run_incremental_graph_stream
+
+    pages_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("pages", "graph", "ckpt"))
+    gen_pages_df(spark, 40, seed=11, partitions=2).write.parquet(pages_dir)
+    run_incremental_graph_stream(spark, pages_dir, out_dir, ckpt)
+    drop = gen_pages_df(spark, 24, seed=12, partitions=1)
+    en_pages = drop.where("lang = 'en'").count()
+    drop.write.mode("append").parquet(pages_dir)
+
+    before = _last_job(spark)
+    ptr = run_incremental_graph_stream(spark, pages_dir, out_dir, ckpt)
+    assert ptr["batch_id"] == 1
+    kernel = [
+        st
+        for st, dot in _fold_stages(spark, before)
+        if str(st.status()) == "COMPLETE" and "MapInArrow" in dot
+    ]
+    runs = [st for st in kernel if st.shuffleReadRecords() > 0]
+    assert len(runs) == 1, [(st.stageId(), st.shuffleReadRecords()) for st in kernel]
+    assert runs[0].shuffleReadRecords() == en_pages
+    assert runs[0].numTasks() >= spark.sparkContext.defaultParallelism
+
+
+def test_incremental_fold_jobs_carry_the_callers_group(spark, tmp_path):
+    """A streaming query runs its jobs under its own job group; the fold
+    tags them with the caller's group, so the caller can count them."""
+    from aperag_spark.streaming.stream import run_incremental_graph_stream
+
+    pages_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("pages", "graph", "ckpt"))
+    gen_pages_df(spark, 12, seed=13, partitions=1).write.parquet(pages_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold-caller", "fold-caller")
+    try:
+        run_incremental_graph_stream(spark, pages_dir, out_dir, ckpt)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc._jsc.sc().statusTracker().getJobIdsForTag("fold-caller")) > 0
+    assert len(sc.getJobTags()) == 0  # the tag lives on the stream thread only
+
+
 def test_resize_and_frame_sampling(spark):
     """resize (nearest-neighbor, real math) and uniform frame sampling over
     the deterministic-fake decode path."""
