@@ -170,6 +170,8 @@ class KGEngine:
         """BM25 search over the chunk index (fulltext_index.py:198-233);
         cjk=True analyzes both index and query with the CJK bigram
         analyzer (ik_max_word/ik_smart stand-in)."""
+        import pyspark.sql.functions as F
+
         from aperag_spark.operators.fulltext import bm25_search, build_fulltext_index
 
         key = "cjk" if cjk else "std"

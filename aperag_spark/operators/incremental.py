@@ -19,12 +19,14 @@ partitioned and the batch side shuffles to it.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
 from aperag_spark.operators.merge import (
-    _entity_levels,
+    _TYPE_VOTE,
+    _entity_types,
     _keyword_list,
+    _refold,
     _summarized_by_string,
     merge_relations,
 )
@@ -47,17 +49,18 @@ def merge_entities_incremental(
     """New-batch mention rows + previous `entities` snapshot → merged
     entities with reference fold-in semantics.
 
-    ONE pass over the raw mention rows: the batch merge's own level-1 and
-    per-entity aggregation (merge._entity_levels, min-of-min == min), and
-    the type vote reads level-1 directly with the existing type folded in.
-    merge_entities() itself is not called: its type vote would be dead
-    here, since the vote is recomputed with the existing snapshot folded
-    in."""
-    lvl1, new = _entity_levels(raw_entities)
+    ONE pass over the raw mention rows: the batch merge's own level-1
+    aggregate and per-entity re-fold (merge._entity_types / _refold,
+    min-of-min == min). Level 1 is lazily checkpointed for its two
+    consumers: the re-fold and the re-vote, which folds the existing type
+    into level-1's counts and takes the batch merge's min_by vote over them
+    (the re-fold's own vote goes unread and is pruned)."""
+    types = _entity_types(raw_entities).localCheckpoint(eager=False)
+    new = _refold(types)
 
     # re-vote including the existing type as one count, losing ties to new
     # (Counter appends existing AFTER new — operate.py:296-301)
-    votes_new = lvl1.select("entity_name", "entity_type", "cnt", "first_occ")
+    votes_new = types.select("entity_name", "entity_type", "cnt", "first_occ")
     votes_old = existing.select(
         F.col("entity_id").alias("entity_name"),
         "entity_type",
@@ -68,14 +71,12 @@ def merge_entities_incremental(
             F.lit(2**31 - 1).alias("r"),
         ).alias("first_occ"),
     )
-    votes = votes_new.unionByName(votes_old).groupBy("entity_name", "entity_type").agg(
-        F.sum("cnt").alias("cnt"), F.min("first_occ").alias("first_occ")
-    )
-    w = Window.partitionBy("entity_name").orderBy(F.desc("cnt"), F.asc("first_occ"))
     winner = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("entity_name", F.col("entity_type").alias("voted_type"))
+        votes_new.unionByName(votes_old)
+        .groupBy("entity_name", "entity_type")
+        .agg(F.sum("cnt").alias("cnt"), F.min("first_occ").alias("first_occ"))
+        .groupBy("entity_name")
+        .agg(F.expr(_TYPE_VOTE).alias("voted_type"))
     )
 
     old = existing.select(

@@ -12,7 +12,9 @@ LSH + CC per BASELINE.json north_rule.
 Scale design:
   * names are blocked by MinHash over 3-gram shingles (pyspark.ml MinHashLSH,
     approxSimilarityJoin) — candidate pairs ~ O(n · bucket size), never O(n²);
-  * the Jaccard threshold is verified exactly by the LSH join distance;
+  * the Jaccard threshold is verified exactly by the LSH join distance
+    (shingle size, table count and threshold are module constants);
+  * each component's canonical member is one min_by in a groupBy;
   * alias_map is tiny relative to entities (only names in some alias pair),
     so the rewrite join is a broadcast;
   * the final re-aggregation reuses merge.py's groupBy (same skew handling).
@@ -27,11 +29,18 @@ from aperag_spark import GRAPH_FIELD_SEP
 from aperag_spark.operators.components import connected_components
 
 
-def _shingles(col, n: int = 3):
+# LSH blocking settings: shingle size, MinHash tables, and the verified
+# Jaccard similarity a candidate pair must reach.
+SHINGLE_N = 3
+NUM_HASH_TABLES = 6
+JACCARD_THRESHOLD = 0.85
+
+
+def _shingles(col):
     """Lowercased character n-grams as an array<string> (JVM-side: no UDF)."""
     lowered = F.lower(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(lowered) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: lowered.substr(i, F.lit(n))))
+    idx = F.sequence(F.lit(1), F.greatest(F.length(lowered) - (SHINGLE_N - 1), F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: lowered.substr(i, F.lit(SHINGLE_N))))
 
 
 # Corporate-suffix synonyms for the normalized surface form. Public-knowledge
@@ -63,12 +72,7 @@ def digit_signature(col):
     return F.regexp_replace(col, r"[^0-9]", "")
 
 
-def candidate_alias_pairs(
-    entities: DataFrame,
-    jaccard_threshold: float = 0.85,
-    num_hash_tables: int = 6,
-    shingle_n: int = 3,
-) -> DataFrame:
+def candidate_alias_pairs(entities: DataFrame) -> DataFrame:
     """entities(entity_id) → (a, b) verified candidate alias pairs.
 
     MinHashLSH over HashingTF(binary) vectors of character shingles;
@@ -80,17 +84,17 @@ def candidate_alias_pairs(
     names = (
         entities.select("entity_id")
         .distinct()
-        .withColumn("shingles", _shingles(F.col("entity_id"), shingle_n))
+        .withColumn("shingles", _shingles(F.col("entity_id")))
         .where(F.size("shingles") > 0)
     )
     tf = HashingTF(
         inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
     vecs = tf.transform(names)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
+    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=NUM_HASH_TABLES, seed=42)
     model = lsh.fit(vecs)
     pairs = model.approxSimilarityJoin(
-        vecs, vecs, 1.0 - jaccard_threshold, distCol="jaccard_dist"
+        vecs, vecs, 1.0 - JACCARD_THRESHOLD, distCol="jaccard_dist"
     )
     # Match rule on top of LSH blocking: high shingle similarity is not
     # sufficient ("Navarro1" ~ "Navarro121"); require identical digit
@@ -125,39 +129,29 @@ def exact_normalized_pairs(entities: DataFrame) -> DataFrame:
     )
 
 
-def build_alias_map(
-    entities: DataFrame,
-    jaccard_threshold: float = 0.85,
-    extra_pairs: DataFrame | None = None,
-) -> DataFrame:
+def build_alias_map(entities: DataFrame) -> DataFrame:
     """→ alias_map(entity_id, canonical_id) for non-identity mappings only.
 
     Canonical representative = the member with the highest mention_count
     (most-attested surface form), ties broken lexicographically — a
     deterministic stand-in for the reference's caller-chosen target entity
-    (utils_graph.py:560-571).
+    (utils_graph.py:560-571). One min_by per component in a groupBy.
     """
-    pairs = exact_normalized_pairs(entities).unionByName(
-        candidate_alias_pairs(entities, jaccard_threshold)
+    pairs = (
+        exact_normalized_pairs(entities)
+        .unionByName(candidate_alias_pairs(entities))
+        .distinct()
     )
-    if extra_pairs is not None:
-        pairs = pairs.unionByName(extra_pairs)
-    pairs = pairs.distinct()
     cc = connected_components(pairs, src="a", dst="b")  # (node, component)
     members = cc.join(
         entities.select(F.col("entity_id").alias("node"), "mention_count"),
         "node",
         "left",
     ).fillna(0, subset=["mention_count"])
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("component").orderBy(
-        F.desc("mention_count"), F.asc("node")
-    )
-    canon = (
-        members.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("component", F.col("node").alias("canonical_id"))
+    canon = members.groupBy("component").agg(
+        F.expr("min_by(node, named_struct('m', -mention_count, 'n', node))").alias(
+            "canonical_id"
+        )
     )
     return (
         members.join(canon, "component")

@@ -9,12 +9,10 @@
   exactly the state the reference reaches by incremental surgery (and is
   idempotent, which the reference's in-place mutation is not).
 
-  Salted two-phase entity aggregation — SURVEY.md §4 skew note: the
-  reference serializes hot entities behind one lock (lightrag.py:500); at
-  web scale a single head entity can still overwhelm one reducer's
-  collect_set. merge_entities_salted splits each key across `salt` partial
-  groups, then combines — identical results (verified in tests), bounded
-  per-reducer state.
+  Head-entity skew (SURVEY.md §4) — the reference serializes hot entities
+  behind one lock (lightrag.py:500) — needs no merge variant here:
+  merge.merge_entities aggregates (name, type) partials map-side and AQE
+  splits skewed partitions (tests/test_skew.py).
 """
 
 from __future__ import annotations
@@ -22,10 +20,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from aperag_spark import FORCE_LLM_SUMMARY_ON_MERGE, GRAPH_FIELD_SEP
+from aperag_spark import GRAPH_FIELD_SEP
 from aperag_spark.operators.extraction import split_mentions
 from aperag_spark.operators.merge import (
-    _summarized_by_string,
     merge_entities,
     merge_relations,
     stub_missing_endpoints,
@@ -80,70 +77,6 @@ def delete_entity(
         (F.col("src_id") != name) & (F.col("tgt_id") != name)
     )
     return ents, rels
-
-
-def merge_entities_salted(
-    raw_entities: DataFrame,
-    salt: int = 16,
-    summary_threshold: int = FORCE_LLM_SUMMARY_ON_MERGE,
-) -> DataFrame:
-    """Two-phase salted variant of merge_entities with identical output:
-    phase 1 aggregates (entity_name, salt_bucket) partials, phase 2 combines
-    per entity_name. Bounded reducer state for head entities."""
-    from pyspark.sql import Window
-
-    salted = raw_entities.withColumn(
-        "_salt", F.pmod(F.xxhash64("source_id", "record_idx"), F.lit(salt))
-    )
-    occ = F.struct(
-        F.col("file_path").alias("u"),
-        F.col("chunk_order_index").alias("c"),
-        F.col("record_idx").alias("r"),
-    )
-    # phase 1: partial aggregates per (name, salt) — and per (name, type, salt)
-    p1 = salted.groupBy("entity_name", "_salt").agg(
-        F.collect_set("description").alias("d"),
-        F.collect_set("source_id").alias("s"),
-        F.collect_set("file_path").alias("f"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    p1_votes = salted.groupBy("entity_name", "entity_type", "_salt").agg(
-        F.count(F.lit(1)).alias("cnt"), F.min(occ).alias("first_occ")
-    )
-    # phase 2: combine partials per key
-    merged = p1.groupBy("entity_name").agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("d")))).alias(
-            "description_frags"
-        ),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("s")))).alias("source_ids"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("f")))).alias("file_paths"),
-        F.sum("cnt").alias("mention_count"),
-    )
-    votes = p1_votes.groupBy("entity_name", "entity_type").agg(
-        F.sum("cnt").alias("cnt"), F.min("first_occ").alias("first_occ")
-    )
-    w = Window.partitionBy("entity_name").orderBy(F.desc("cnt"), F.asc("first_occ"))
-    winner = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("entity_name", "entity_type")
-    )
-    return (
-        merged.join(winner, "entity_name")
-        .withColumn(
-            "description",
-            _summarized_by_string("description_frags", summary_threshold),
-        )
-        .select(
-            F.col("entity_name").alias("entity_id"),
-            "entity_type",
-            "description",
-            "description_frags",
-            "source_ids",
-            "file_paths",
-            "mention_count",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ of serializing behind one lock.
 
 Semantics reproduced exactly (citations inline):
   M3  entity-type majority vote, ties → first-seen     operate.py:296-301
+      (one min_by inside the per-entity aggregate)
   M4  description = '<SEP>'.join(sorted(set))          operate.py:303-304
   M5  source_id / file_path = set union                operate.py:306-310
   M6  LLM summary when fragments >= 10 (stubbed        operate.py:317-336,
@@ -65,28 +66,33 @@ def _summarized_by_string(frags_col: str, threshold: int):
     )
 
 
-def _entity_levels(raw_entities: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """ONE aggregation pass over raw entity mention rows, shared by the batch
-    merge and the incremental fold-in (operators/incremental.py): the
-    (entity_name, entity_type) level-1 aggregate carries the per-type
-    fragment/provenance sets, the vote count and the first-occurrence key;
-    the per-entity merge re-folds the level-1 sets (set union is
-    associative, sum-of-count == count). Level-1 is tiny (distinct (name,
-    type) pairs) and lazily checkpointed for its two consumers: the merge
-    and the M3 type vote, a window over level-1. Returns (level-1,
-    per-entity)."""
-    lvl1 = (
-        raw_entities.groupBy("entity_name", "entity_type")
-        .agg(
-            F.array_sort(F.collect_set("description")).alias("d"),
-            F.array_sort(F.collect_set("source_id")).alias("s"),
-            F.array_sort(F.collect_set("file_path")).alias("f"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(_occ()).alias("first_occ"),
-        )
-        .localCheckpoint(eager=False)
+# M3 vote as one aggregate: Counter + stable sort desc == (count desc,
+# first-seen asc), so the winner is the type with the smallest
+# (-count, first occurrence). Shared by the batch re-fold and the
+# incremental re-vote (operators/incremental.py).
+_TYPE_VOTE = "min_by(entity_type, named_struct('n', -cnt, 'o', first_occ))"
+
+
+def _entity_types(raw_entities: DataFrame) -> DataFrame:
+    """Level 1: ONE aggregation pass over raw entity mention rows, keyed by
+    (entity_name, entity_type). Each row carries the per-type fragment and
+    provenance sets, the vote count and the first-occurrence key. Tiny
+    (distinct (name, type) pairs); the batch merge and the incremental
+    fold-in both re-fold it."""
+    return raw_entities.groupBy("entity_name", "entity_type").agg(
+        F.array_sort(F.collect_set("description")).alias("d"),
+        F.array_sort(F.collect_set("source_id")).alias("s"),
+        F.array_sort(F.collect_set("file_path")).alias("f"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.min(_occ()).alias("first_occ"),
     )
-    merged = lvl1.groupBy("entity_name").agg(
+
+
+def _refold(types: DataFrame) -> DataFrame:
+    """Level 2: the per-entity merge re-folds the level-1 sets (set union is
+    associative, sum-of-count == count) and takes the M3 vote in the same
+    aggregate."""
+    return types.groupBy("entity_name").agg(
         F.array_sort(F.array_distinct(F.flatten(F.collect_list("d")))).alias(
             "description_frags"
         ),
@@ -97,8 +103,8 @@ def _entity_levels(raw_entities: DataFrame) -> tuple[DataFrame, DataFrame]:
             "file_paths"
         ),
         F.sum("cnt").alias("mention_count"),
+        F.expr(_TYPE_VOTE).alias("entity_type"),
     )
-    return lvl1, merged
 
 
 def merge_entities(
@@ -107,27 +113,16 @@ def merge_entities(
 ) -> DataFrame:
     """raw mention rows → one row per entity_name.
 
-    ONE aggregation pass over the raw rows (_entity_levels); the M3 type
-    vote is a window over its level-1 aggregate. A vote keyed by
-    (name, type) and a merge keyed by name could not share an exchange, so
-    two independent aggregations would run the raw mention explode
+    ONE aggregation pass over the raw rows (_entity_types), re-folded per
+    name with the M3 type vote inside the re-fold (_refold). A vote keyed
+    by (name, type) and a merge keyed by name could not share an exchange,
+    so two independent aggregations would run the raw mention explode
     upstream twice. Skewed head entities are split by AQE (partial
     aggregation happens map-side, so the hot key's reducer sees combined
     per-type sets).
     """
-    lvl1, merged = _entity_levels(raw_entities)
-    # M3: vote. Counter + stable sort desc == (count desc, first-seen asc)
-    w = Window.partitionBy("entity_name").orderBy(
-        F.desc("cnt"), F.asc("first_occ")
-    )
-    winner = (
-        lvl1.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("entity_name", "entity_type")
-    )
-
     return (
-        merged.join(winner, "entity_name")
+        _refold(_entity_types(raw_entities))
         .withColumn(
             "description", _summarized_by_string("description_frags", summary_threshold)
         )

@@ -79,12 +79,26 @@ def memo(spark: SparkSession, key, build):
 
 
 def clear(spark: SparkSession) -> None:
-    """Drop every memo entry of this session, unpersisting the frames (and
-    the frames inside dict entries)."""
+    """Drop every memo entry of this session and release its frames (and
+    the frames inside dict entries). A memo frame must not be read after
+    `clear()`: a released checkpoint has no lineage to recompute from."""
     for value in vars(spark).pop("_aperag_memo", {}).values():
         for df in value.values() if isinstance(value, dict) else [value]:
             if isinstance(df, DataFrame):
-                df.unpersist()
+                release(df)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks a frame holds, once nothing reads it. A
+    localCheckpoint frame (its plan is the checkpointed RDD) is released
+    through that RDD: DataFrame.unpersist() only drops cache-manager
+    entries, so it would leave the checkpoint's blocks in place until the
+    JVM collects the RDD. Any other frame is unpersisted."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from aperag_spark import CHUNK_OVERLAP_TOKEN_SIZE, CHUNK_TOKEN_SIZE
 from aperag_spark.operators.extraction import _narrow_page, extract_mentions_fused
 from aperag_spark.plans.stages import SnapshotLog
-from aperag_spark.session import ensure_package_shipped
+from aperag_spark.session import ensure_package_shipped, release
 from aperag_spark.synth import PAGES_SCHEMA
 from aperag_spark.textproc import get_tokenizer
 
@@ -184,13 +184,6 @@ def streaming_exact_dedup(
     )
 
 
-def _release(checkpointed: DataFrame) -> None:
-    """Free the blocks of a localCheckpoint frame once nothing reads it.
-    DataFrame.unpersist() only drops cache-manager entries, so it leaves a
-    checkpoint's RDD blocks in place until the JVM collects the RDD."""
-    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def run_incremental_graph_stream(
     spark: SparkSession,
     pages_dir: str,
@@ -240,7 +233,7 @@ def run_incremental_graph_stream(
                 relations=log.write(rels.drop("first_occ"), "relations", batch_id),
             )
         finally:
-            _release(mentions)
+            release(mentions)
 
     mentions = streaming_mentions(
         read_pages_stream(spark, pages_dir, max_files_per_trigger), workspace
@@ -439,7 +432,7 @@ def run_streaming_neardup(
         # a long-lived stream folds thousands of batches: release the
         # per-batch checkpointed blocks instead of pinning them forever
         for ckpt in (nb, edges_all):
-            _release(ckpt)
+            release(ckpt)
 
     ensure_package_shipped(spark)
     docs_stream = (

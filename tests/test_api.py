@@ -44,6 +44,17 @@ def test_fulltext_search(engine):
     assert hits and all(r["rank"] >= 1 for r in hits)
 
 
+def test_fulltext_search_cjk(engine):
+    # the CJK analyzer bigrams CJK runs only; Latin tokens stay whole, so on
+    # this English corpus it ranks exactly like the standard analyzer
+    first_chunk = engine.chunks.select("content").first()["content"]
+    kw = next(w for w in first_chunk.split() if len(w) > 4 and w.isalpha())
+    hits = engine.fulltext_search([kw], topk=5, cjk=True).collect()
+    assert hits and all(r["rank"] >= 1 for r in hits)
+    std = engine.fulltext_search([kw], topk=5).collect()
+    assert sorted(map(tuple, hits)) == sorted(map(tuple, std))
+
+
 def test_graph_maintenance_roundtrip(engine):
     target = engine.entities.orderBy("entity_id").first()["entity_id"]
     engine.rename_entity(target, "Renamed Target")

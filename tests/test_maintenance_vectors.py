@@ -1,15 +1,12 @@
-"""Tests for M15 delete/unindex, salted two-phase merge equivalence, and the
-vector-side operators (V1-V4)."""
+"""Tests for M15 delete/unindex, the curation verbs and the vector-side
+operators (V1-V4)."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from aperag_spark.operators.chunking import chunk_texts, extract_texts
 from aperag_spark.operators.extraction import extract_mentions, split_mentions
-from aperag_spark.operators.maintenance import (
-    delete_documents,
-    merge_entities_salted,
-)
+from aperag_spark.operators.maintenance import delete_documents
 from aperag_spark.operators.merge import (
     merge_entities,
     merge_relations,
@@ -54,23 +51,6 @@ def test_delete_documents_equals_recompute_without_them(spark, mentions):
     cols_r = ["src_id", "tgt_id", "weight", "keywords", "description"]
     assert sorted(map(str, del_r.select(cols_r).collect())) == sorted(
         map(str, ref_r.select(cols_r).collect())
-    )
-
-
-def test_salted_merge_identical_output(spark, mentions):
-    raw_e, _ = split_mentions(mentions)
-    plain = merge_entities(raw_e)
-    salted = merge_entities_salted(raw_e, salt=7)
-    cols = [
-        "entity_id",
-        "entity_type",
-        "description",
-        "source_ids",
-        "file_paths",
-        "mention_count",
-    ]
-    assert sorted(map(str, plain.select(cols).collect())) == sorted(
-        map(str, salted.select(cols).collect())
     )
 
 

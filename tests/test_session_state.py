@@ -14,15 +14,24 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_memo_builds_once_per_session_and_clear_releases(spark):
     calls = []
+    jsc = spark.sparkContext._jsc
+
+    def persisted():  # ids of the RDDs holding blocks (checkpoints, caches)
+        return set(jsc.getPersistentRDDs().keySet().toArray())
 
     def build():
         calls.append(1)
         return spark.range(5).localCheckpoint(eager=False)
 
+    before = persisted()
     a = memo(spark, ("test_memo", 1), build)
     assert memo(spark, ("test_memo", 1), build) is a
     assert len(calls) == 1
+    assert a.count() == 5 and persisted() - before
     clear(spark)
+    # the checkpoint's blocks are freed, not left for the JVM's collector
+    # (a subset, not equality: the collector may drop unrelated RDDs)
+    assert persisted() <= before
     b = memo(spark, ("test_memo", 1), build)
     assert b is not a and len(calls) == 2
     assert b.count() == 5

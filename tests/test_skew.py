@@ -1,12 +1,10 @@
 """Head-entity skew stress: one entity receives 200k of 220k mentions —
 the shape that serializes the reference behind a single lock
-(lightrag.py:500) and that a naive reducer would choke on. Both the plain
-merge (map-side partial agg + AQE) and the salted two-phase variant must
-complete and agree."""
+(lightrag.py:500) and that a naive reducer would choke on. The merge
+(map-side partial agg + AQE) must complete with full provenance."""
 
 import pyspark.sql.functions as F
 
-from aperag_spark.operators.maintenance import merge_entities_salted
 from aperag_spark.operators.merge import merge_entities
 
 
@@ -34,7 +32,7 @@ def _skewed_mentions(spark, n_hot=200_000, n_cold=20_000):
     return hot.unionByName(cold)
 
 
-def test_head_entity_merge_completes_and_salted_agrees(spark):
+def test_head_entity_merge_completes(spark):
     raw = _skewed_mentions(spark)
     plain = merge_entities(raw)
     hot_plain = plain.where(plain.entity_id == "Mega Corp").collect()[0]
@@ -42,15 +40,9 @@ def test_head_entity_merge_completes_and_salted_agrees(spark):
     assert len(hot_plain["source_ids"]) == 200_000  # full provenance retained
     assert len(hot_plain["description_frags"]) == 40
     assert hot_plain["description"].startswith("SUMMARY:")  # ≥10 frags → M6
-
-    salted = merge_entities_salted(raw, salt=32)
-    hot_salted = salted.where(salted.entity_id == "Mega Corp").collect()[0]
-    assert hot_salted["mention_count"] == hot_plain["mention_count"]
-    assert hot_salted["description"] == hot_plain["description"]
-    assert hot_salted["source_ids"] == hot_plain["source_ids"]
-    assert hot_salted["entity_type"] == hot_plain["entity_type"]
+    assert hot_plain["entity_type"] == "organization"
     # cold keys unaffected
-    assert plain.count() == salted.count() == 5001
+    assert plain.count() == 5001
 
 
 def test_minhash_degenerate_bucket_capped(spark, tmp_path, monkeypatch):
