@@ -14,7 +14,9 @@ workflow through these same verbs:
 Everything returns DataFrames (lazy plans); nothing collects to the driver.
 The graph tables live as checkpointed pipeline stages under `out_dir`
 (resumable, manifest-gated — plans/stages.py); vdbs and the fulltext index
-are derived lazily and cached per instance.
+are derived lazily and cached per instance. A verb that replaces a table
+releases the checkpoints it supersedes, so frames taken from an engine
+before a verb are not to be read after it.
 """
 
 from __future__ import annotations
@@ -57,10 +59,35 @@ class KGEngine:
             workspace=self.workspace,
             input_fingerprint=input_fingerprint,
         )
+        superseded = list(self._tables.values())
         self._tables = dict(res)
-        self._vdbs.clear()
-        self._ft_index = None
+        self._release(superseded, fulltext=True)
         return {k: v for k, v in res.items()}
+
+    def _commit(self, tables: dict[str, DataFrame], fulltext: bool = False) -> None:
+        """Install a verb's rebuilt tables: checkpoint every one of them, then
+        release what they supersede (`_release`)."""
+        new = {name: df.localCheckpoint() for name, df in tables.items()}
+        superseded = [self._tables[name] for name in new if name in self._tables]
+        self._tables.update(new)
+        self._release(superseded, fulltext)
+
+    def _release(self, superseded: list[DataFrame], fulltext: bool) -> None:
+        """Free the blocks of superseded tables and of the vdbs (and, with
+        `fulltext`, the fulltext index) derived from them, and drop those
+        caches. The replacements no longer read them (an eager checkpoint
+        or a stage re-read), but a frame taken from this engine before the
+        change must not be read after it."""
+        from aperag_spark.session import release
+
+        frames = superseded + list(self._vdbs.values())
+        if fulltext:
+            for idx in (self._ft_index or {}).values():
+                frames += idx.values()
+            self._ft_index = None
+        for df in frames:
+            release(df)
+        self._vdbs.clear()
 
     def _table(self, name: str) -> DataFrame:
         """Stage `name` of this engine's graph: the frame of the last
@@ -200,26 +227,21 @@ class KGEngine:
         entities, relations = delete_documents(self._table("mentions"), urls)
         alias_map = build_alias_map(entities)
         ents_c, rels_c = canonicalize(entities, relations, alias_map)
-        self._tables["entities_canonical"] = ents_c.localCheckpoint()
-        self._tables["relations_canonical"] = rels_c.localCheckpoint()
-        self._vdbs.clear()
-        self._ft_index = None
+        self._commit(
+            {"entities_canonical": ents_c, "relations_canonical": rels_c}, fulltext=True
+        )
 
     def rename_entity(self, old_name: str, new_name: str) -> None:
         from aperag_spark.operators.maintenance import rename_entity
 
         ents, rels = rename_entity(self.entities, self.relations, old_name, new_name)
-        self._tables["entities_canonical"] = ents.localCheckpoint()
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"entities_canonical": ents, "relations_canonical": rels})
 
     def delete_entity(self, name: str) -> None:
         from aperag_spark.operators.maintenance import delete_entity
 
         ents, rels = delete_entity(self.entities, self.relations, name)
-        self._tables["entities_canonical"] = ents.localCheckpoint()
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"entities_canonical": ents, "relations_canonical": rels})
 
     # -- M14 curation verbs (utils_graph.py manual-editing API) -----------
 
@@ -228,8 +250,7 @@ class KGEngine:
         from aperag_spark.operators.maintenance import create_entity
 
         ents = create_entity(self.entities, entity_name, entity_data or {})
-        self._tables["entities_canonical"] = ents.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"entities_canonical": ents})
 
     def edit_entity(
         self, entity_name: str, updated_data: dict, allow_rename: bool = True
@@ -242,9 +263,7 @@ class KGEngine:
         ents, rels = edit_entity(
             self.entities, self.relations, entity_name, updated_data, allow_rename
         )
-        self._tables["entities_canonical"] = ents.localCheckpoint()
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"entities_canonical": ents, "relations_canonical": rels})
 
     def create_relation(
         self, source_entity: str, target_entity: str, relation_data: dict | None = None
@@ -255,8 +274,7 @@ class KGEngine:
         rels = create_relation(
             self.entities, self.relations, source_entity, target_entity, relation_data or {}
         )
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"relations_canonical": rels})
 
     def edit_relation(
         self, source_entity: str, target_entity: str, updated_data: dict
@@ -265,16 +283,14 @@ class KGEngine:
         from aperag_spark.operators.maintenance import edit_relation
 
         rels = edit_relation(self.relations, source_entity, target_entity, updated_data)
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"relations_canonical": rels})
 
     def delete_relation(self, source_entity: str, target_entity: str) -> None:
         """adelete_by_relation (utils_graph.py:68-105); missing edge = no-op."""
         from aperag_spark.operators.maintenance import delete_relation
 
         rels = delete_relation(self.relations, source_entity, target_entity)
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"relations_canonical": rels})
 
     def merge_entities(
         self,
@@ -296,9 +312,7 @@ class KGEngine:
             merge_strategy,
             target_entity_data,
         )
-        self._tables["entities_canonical"] = ents.localCheckpoint()
-        self._tables["relations_canonical"] = rels.localCheckpoint()
-        self._vdbs.clear()
+        self._commit({"entities_canonical": ents, "relations_canonical": rels})
 
     # -- export / introspection -------------------------------------------
 

@@ -1,25 +1,63 @@
-"""Connected components over an edge DataFrame via iterative joins
-(the "hash-min" label-propagation variant of large-star/small-star;
-see Kiveris et al., "Connected Components in MapReduce and Beyond").
+"""Connected components over an edge list, two ways with the same labels
+(component = min node id):
+
+* `union_find` — pure Python on the driver, for an edge list already
+  collected behind a cap (alias linking, M13: a bounded result of an
+  iterative graph step is finished on the driver, in no Spark job);
+* `connected_components` — distributed, over an edge DataFrame via
+  iterative joins (the "hash-min" label-propagation variant of
+  large-star/small-star; see Kiveris et al., "Connected Components in
+  MapReduce and Beyond"), for edge lists too long for the driver: the alias
+  route above the cap, near-dup clustering (`corpus.cluster_verdict`) and
+  the `kg_connected_components` query.
 
 The reference computes components with an in-memory BFS over the batch's
 adjacency dict (lightrag.py:387-439) purely to scope locks; the rebuild uses
-CC for something semantic — collapsing alias groups found by MinHash-LSH into
-canonical entity ids — so it must run distributed.
+CC for something semantic — collapsing alias groups and near-duplicate
+clusters into canonical ids.
 
-Scale notes: each iteration is one self-join + one groupBy-min; lineage is
-cut with localCheckpoint() per iteration so plans don't grow superlinearly;
-convergence is detected by counting changed labels (an aggregate, not a
-collect of the data). Alias clusters are tiny-diameter (name variants), so
-iterations ~ O(log d) ≈ 2-4 in practice; max_iter bounds pathology, and a
-run that reaches it without converging raises instead of returning partial
-labels.
+Hash-min scale notes: each iteration is one self-join + one groupBy-min;
+lineage is cut with localCheckpoint() per iteration so plans don't grow
+superlinearly; convergence is detected by counting changed labels (an
+aggregate, not a collect of the data). Alias clusters are tiny-diameter
+(name variants), so iterations ~ O(log d) ≈ 2-4 in practice; max_iter
+bounds pathology, and a run that reaches it without converging raises
+instead of returning partial labels.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+
+def union_find(edges: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """(src, dst) pairs → {node: component}, component = min node id of its
+    component (string min) — the labels `connected_components` returns.
+    Undirected; self-loops and edges with a null end are skipped, so a node
+    only on those is absent, as there."""
+    parent: dict[str, str] = {}
+
+    def root(x: str) -> str:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in edges:
+        if a is None or b is None or a == b:
+            continue
+        ra, rb = root(parent.setdefault(a, a)), root(parent.setdefault(b, b))
+        # a root is the min of its set, so the smaller root stays one
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    return {x: root(x) for x in parent}
 
 
 def connected_components(

@@ -11,8 +11,8 @@ Stage graph (stage tables in [brackets], shuffle boundaries marked *):
     [mentions] ─ raw_entities  ─* merge_entities ──────────┐
                └ raw_relations ─* merge_relations = R ─────┴─ stub endpoints ─ [entities]
     R ─ finalize ─ [relations]           (R: lazy localCheckpoint, 3 consumers)
-    [entities] ─* MinHash LSH + connected components ─ [alias_map]
-    [entities] + R + [alias_map] ─* canonicalize
+    [entities] ─* name blocking + verify ─ collect ─ union-find ─ [alias_map]
+    [entities] + R + [alias_map] ─* canonicalize (built once)
                ─ [entities_canonical], [relations_canonical]
 
 A stage's inputs are built only inside the stage builds that consume them,
@@ -104,14 +104,13 @@ def run_pipeline(
         alias_map = stage("alias_map", lambda: build_alias_map(entities))
 
         # canonicalize consumes merge-internal columns → the full relations
-        # frame, not the finalized stage; each stage writes one of its outputs
-        stage(
-            "entities_canonical",
-            lambda: canonicalize(entities, relations_full(), alias_map)[0],
-        )
-        stage(
-            "relations_canonical",
-            lambda: canonicalize(entities, relations_full(), alias_map)[1],
-        )
+        # frame, not the finalized stage; its two outputs are built once and
+        # each stage writes one of them
+        @functools.cache
+        def canonical():
+            return canonicalize(entities, relations_full(), alias_map)
+
+        stage("entities_canonical", lambda: canonical()[0])
+        stage("relations_canonical", lambda: canonical()[1])
 
     return stage.results

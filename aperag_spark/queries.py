@@ -954,8 +954,9 @@ FROM agg CROSS JOIN tent
 
 def q_kg_connected_components(spark, sf_dir):
     """M1 connected components, ORACLE-CHECKED: the distributed hash-min +
-    pointer-jumping operator (operators/components.py — the alias-collapse
-    engine of M13) over a fragmented word graph (bigram edges restricted to
+    pointer-jumping operator (operators/components.py — M13's alias route
+    for edge lists above linking.ALIAS_EDGE_CAP, and near-dup clustering's
+    engine) over a fragmented word graph (bigram edges restricted to
     same-first-letter pairs → several components), vs a recursive-CTE
     transitive closure with min-label in DuckDB. Component id = min node id
     on both sides."""

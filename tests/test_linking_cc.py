@@ -1,17 +1,27 @@
 """Connected components (M1) and alias linking/canonicalization (M13) —
-includes the FIXTURES.md F5 component fixture and the alias-collapse cases."""
+includes the FIXTURES.md F5 component fixture and the alias-collapse cases,
+on both alias-map routes (driver union-find and distributed hash-min)."""
 
 import re
 
 import pyspark.sql.functions as F
 import pytest
 
-from aperag_spark.operators.components import connected_components
+from aperag_spark.operators import linking
+from aperag_spark.operators.components import connected_components, union_find
 from aperag_spark.operators.linking import (
+    alias_edges,
     build_alias_map,
     canonicalize,
-    exact_normalized_pairs,
 )
+
+
+def _components(edges, **kw):
+    """{node: component} from hash-min, checked equal to union_find's."""
+    cc = connected_components(edges, **kw)
+    comp = {r["node"]: r["component"] for r in cc.collect()}
+    assert union_find(map(tuple, edges.collect())) == comp
+    return comp
 
 
 def test_cc_component_fixture(spark):
@@ -20,8 +30,7 @@ def test_cc_component_fixture(spark):
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("D", "E")], "src string, dst string"
     )
-    cc = connected_components(edges)
-    comp = {r["node"]: r["component"] for r in cc.collect()}
+    comp = _components(edges)
     assert comp["A"] == comp["B"] == comp["C"]
     assert comp["D"] == comp["E"]
     assert comp["A"] != comp["D"]
@@ -33,8 +42,7 @@ def test_cc_long_chain_converges(spark):
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], "src string, dst string"
     )
-    cc = connected_components(edges, max_iter=30)
-    comps = {r["component"] for r in cc.collect()}
+    comps = set(_components(edges, max_iter=30).values())
     assert comps == {"n00"}  # one component, min-id label
 
 
@@ -53,8 +61,7 @@ def test_cc_handles_cycles_and_self_loops(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("z", "z")], "src string, dst string"
     )
-    cc = connected_components(edges)
-    comp = {r["node"]: r["component"] for r in cc.collect()}
+    comp = _components(edges)
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert "z" not in comp  # self-loop only → no edge
 
@@ -79,8 +86,8 @@ def _entities(spark, rows):
     )
 
 
-def test_alias_map_collapses_planted_variants(spark):
-    ents = _entities(
+def _planted(spark):
+    return _entities(
         spark,
         [
             ("Acme Corp", "organization", 10),
@@ -90,7 +97,25 @@ def test_alias_map_collapses_planted_variants(spark):
             ("Boris Navarro121", "person", 3),  # digits differ → NOT merged
         ],
     )
-    am = {r["entity_id"]: r["canonical_id"] for r in build_alias_map(ents).collect()}
+
+
+def _alias_map(ents):
+    return {r["entity_id"]: r["canonical_id"] for r in build_alias_map(ents).collect()}
+
+
+@pytest.fixture(scope="module")
+def synth_entities(spark, tmp_path_factory):
+    """The entities stage of a 120-page synthetic insert, read back."""
+    from aperag_spark.plans.pipeline import run_pipeline
+    from aperag_spark.synth import gen_pages_df
+
+    out = str(tmp_path_factory.mktemp("linking_synth"))
+    pages = gen_pages_df(spark, 120, seed=42, partitions=4)
+    return run_pipeline(spark, pages, out, input_fingerprint="l", with_linking=False)["entities"]
+
+
+def test_alias_map_collapses_planted_variants(spark):
+    am = _alias_map(_planted(spark))
     assert am == {
         "ACME Corporation": "Acme Corp",
         "Acme Corp.": "Acme Corp",
@@ -102,8 +127,10 @@ def test_exact_normalized_pairs_suffix_synonyms(spark):
         spark,
         [("Initech Incorporated", "organization", 1), ("Initech Inc", "organization", 2)],
     )
-    pairs = exact_normalized_pairs(ents).collect()
-    assert len(pairs) == 1
+    # one edge, from the normalized-name bucket ("initech inc"); the
+    # shingle Jaccard of the two names is far below the threshold
+    edges = [(r["a"], r["b"]) for r in alias_edges(ents).collect()]
+    assert edges == [("Initech Inc", "Initech Incorporated")]
 
 
 def test_canonicalize_repoints_edges_and_drops_self_loops(spark):
@@ -134,3 +161,59 @@ def test_canonicalize_repoints_edges_and_drops_self_loops(spark):
     assert set(ents_out) == {"Acme Corp", "Other Co"}
     assert ents_out["Acme Corp"]["mention_count"] == 6
     assert "Acme Corp." in ents_out["Acme Corp"]["alias_names"]
+
+
+def test_alias_map_routes_agree(spark, synth_entities, monkeypatch):
+    """At or below ALIAS_EDGE_CAP the map comes from the driver union-find;
+    with the cap at 0 every non-empty edge list takes the hash-min route.
+    Both give the same map, on the planted fixture and on a synth insert."""
+    hash_min_runs = []
+
+    def spy(*args, **kwargs):
+        hash_min_runs.append(1)
+        return connected_components(*args, **kwargs)
+
+    monkeypatch.setattr(linking, "connected_components", spy)
+    for ents in (_planted(spark), synth_entities):
+        hash_min_runs.clear()
+        driver = _alias_map(ents)
+        assert not hash_min_runs
+        with monkeypatch.context() as m:
+            m.setattr(linking, "ALIAS_EDGE_CAP", 0)
+            assert _alias_map(ents) == driver
+        assert hash_min_runs == [1]
+    # the synth corpus plants surface variants: the map is not trivially empty
+    assert len(driver) >= 10
+
+
+def test_alias_map_stage_runs_three_jobs(spark, synth_entities, tmp_path):
+    """The alias_map stage: the blocking groupBy (its shuffle map job and the
+    edge collect) and the stage write — no CC rounds, no join back."""
+    from aperag_spark.plans.stages import write_stage
+
+    sc = spark.sparkContext
+    sc.setJobGroup("alias-map-stage", "alias-map-stage")
+    try:
+        written = write_stage(build_alias_map(synth_entities), str(tmp_path), "alias_map", "j")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("alias-map-stage")
+    assert len(jobs) <= 3, f"{len(jobs)} jobs"
+    assert written.count() > 0
+
+
+def test_non_ascii_names_stay_separate(spark):
+    """Unicode letters survive normalization: CJK and Cyrillic names do not
+    all normalize to '' (and so link to each other), and accented variants
+    still link."""
+    ents = _entities(
+        spark,
+        [
+            ("東京", "location", 3),
+            ("北京", "location", 2),
+            ("Москва", "location", 1),
+            ("Café Corp", "organization", 4),
+            ("CAFÉ CORP.", "organization", 1),
+        ],
+    )
+    assert _alias_map(ents) == {"CAFÉ CORP.": "Café Corp"}

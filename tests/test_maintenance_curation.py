@@ -358,6 +358,25 @@ def test_kgengine_curation_wiring(spark, tmp_path):
     )
 
 
+def test_kgengine_verbs_release_superseded_frames(spark, tmp_path):
+    """A verb frees the checkpointed tables it replaces and the vdbs built
+    from them: after the first verb, later ones hold no more RDD blocks."""
+    from aperag_spark.api import KGEngine
+    from aperag_spark.synth import gen_pages_df
+
+    eng = KGEngine(spark, str(tmp_path / "kg"))
+    eng.insert(gen_pages_df(spark, 12, seed=7, partitions=2), input_fingerprint="t")
+    jsc = spark.sparkContext._jsc
+    first = eng.entities.orderBy("entity_id").first()["entity_id"]
+    eng.rename_entity(first, "Renamed 1")
+    held = jsc.getPersistentRDDs().size()
+    eng.query("Renamed 1", mode="local", top_k=5)  # checkpoints both vdbs
+    eng.rename_entity("Renamed 1", "Renamed 2")
+    eng.rename_entity("Renamed 2", "Renamed 3")
+    assert jsc.getPersistentRDDs().size() <= held
+    assert "Renamed 3" in {r["entity_id"] for r in eng.entities.collect()}
+
+
 @needs_reference
 def test_merge_matrix_randomized_fuzz_vs_reference(reference):
     """500 randomized (data_list, strategy) cases per variant against the

@@ -10,6 +10,7 @@ pinned on hand-built frames:
     lexicographically smallest name.
 """
 
+from aperag_spark.operators import linking
 from aperag_spark.operators.incremental import merge_entities_incremental
 from aperag_spark.operators.linking import build_alias_map
 from aperag_spark.operators.merge import merge_entities
@@ -67,7 +68,7 @@ def test_incremental_vote_tie_goes_to_the_new_type(spark):
     assert _types(merged) == {"X": "zeta", "Y": "alpha", "W": "alpha"}
 
 
-def test_alias_canonical_tie_goes_to_the_smallest_name(spark):
+def test_alias_canonical_tie_goes_to_the_smallest_name(spark, monkeypatch):
     entities = spark.createDataFrame(
         [
             ("Acme Corp", 5),
@@ -77,5 +78,8 @@ def test_alias_canonical_tie_goes_to_the_smallest_name(spark):
         ],
         "entity_id string, mention_count long",
     )
-    alias = {r["entity_id"]: r["canonical_id"] for r in build_alias_map(entities).collect()}
-    assert alias == {"Acme Corp": "ACME Corp.", "Zenith Limited": "Zenith Ltd"}
+    # both routes: the driver union-find, then hash-min (cap 0)
+    for cap in (linking.ALIAS_EDGE_CAP, 0):
+        monkeypatch.setattr(linking, "ALIAS_EDGE_CAP", cap)
+        alias = {r["entity_id"]: r["canonical_id"] for r in build_alias_map(entities).collect()}
+        assert alias == {"Acme Corp": "ACME Corp.", "Zenith Limited": "Zenith Ltd"}
